@@ -32,6 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from legalchatbot_vectordb_exp_spark import staging  # noqa: E402
 from legalchatbot_vectordb_exp_spark.queries import QUERIES  # noqa: E402
 from legalchatbot_vectordb_exp_spark.session import get_spark  # noqa: E402
 
@@ -45,45 +46,6 @@ from legalchatbot_vectordb_exp_spark.session import get_spark  # noqa: E402
 # perf review (round-4 judge item 4: r4's subset form surfaced only
 # 77/117 timings to the driver artifact).
 _TAIL_BUDGET = 1940
-
-# Queries whose FIRST run builds a process-cached fixture (staged
-# event logs, CDF staging, versioned-warehouse histories, the
-# persisted IVF layout) that later runs reuse.  For these the bench
-# separates FIXTURE-BUILD seconds (first run minus steady state) from
-# QUERY seconds (the steady-state min) so a plan regression is visible
-# through the fixture noise: the reported per-query timing is the
-# steady number, and the "fixture" map carries the one-time build
-# cost.  (Round-10 judge item 8: suite wall crept 90→141 s across four
-# rounds mostly from fixture-heavy warehouse queries.)
-_STAGED_FIXTURE_QUERIES = frozenset(
-    {
-        "ann_filtered_persisted",
-        "ann_ivf_incremental",
-        "ann_ivf_persisted",
-        "ann_graph_search",
-        "ann_graph_search_recall",
-        "ann_knn_graph",
-        "ann_knn_graph_recall",
-        "ann_hnsw_search",
-        "ann_hnsw_recall",
-        "ann_knn_graph_incremental",
-        "ann_knn_graph_incr_recall",
-        "ann_sparse_persisted",
-        "ann_sparse_topk",
-        "ann_sparse_idf",
-        "sparse_layout_incremental",
-        "hybrid_fusion_search",
-        "hybrid_fusion_dbsf",
-        "cdf_stream_fold",
-        "clone_diverge",
-        "dedup_index_cdc_maintain",
-        "sparse_index_cdc_maintain",
-        "events_stream_join_live",
-        "events_streaming_live",
-        "restore_rollback",
-    }
-)
-
 
 def _fit_summary(
     total: float, sf, timings: dict[str, float],
@@ -589,6 +551,36 @@ def _quantile_stats(samples: list[float]) -> list[float]:
     return [round(s[0], 2), round(med, 2), round(s[-1], 2)]
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the paths every query shares before the clock starts: scan
+    + codegen (count), a shuffled aggregate, and the Arrow/Python-worker
+    bridge — otherwise the alphabetically-first query is billed for
+    one-time JVM/worker initialization.  Warms ALL ``SPARK_GRAFT_CPUS``
+    Python workers including their numpy/pandas imports (~3.4 s
+    one-time under import contention — round 2 billed this to whichever
+    numpy-kernel query ran first), and the first createDataFrame
+    (~1.8 s of Py4J/Arrow setup)."""
+
+    def _warm_kernel(batches):  # nested: shipped by value, not by import
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+
+        yield from batches
+
+    warm = spark.read.parquet(f"{sf_dir}/region.parquet")
+    warm.count()
+    warm.groupBy("r_regionkey").count().write.mode("overwrite").format(
+        "noop"
+    ).save()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark.range(cpus * 4).repartition(cpus).mapInPandas(
+        _warm_kernel, schema="id long"
+    ).write.mode("overwrite").format("noop").save()
+    spark.createDataFrame([(0, 0)], "a long, b long").write.mode(
+        "overwrite"
+    ).format("noop").save()
+
+
 def main(queries=None, sf_dir=None, stop=True, emit=True) -> dict:
     """Run the suite and return the full payload dict.  ``queries``/
     ``sf_dir``/``stop``/``emit`` exist so the pytest fault-isolation
@@ -614,33 +606,7 @@ def main(queries=None, sf_dir=None, stop=True, emit=True) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the paths every query shares before the clock starts: scan +
-    # codegen (count), a shuffled aggregate, and the Arrow/Python-worker
-    # bridge (tiny mapInPandas) — otherwise the alphabetically-first
-    # query is billed for one-time JVM/worker initialization.
-    warm = spark.read.parquet(f"{sf_dir}/region.parquet")
-    warm.count()
-    warm.groupBy("r_regionkey").count().write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # Warm ALL 32 Python workers including their numpy/pandas imports
-    # (~3.4 s one-time under import contention — round 2 billed this to
-    # whichever numpy-kernel query happened to run first, which is why
-    # per-query times drifted between rounds), and the first
-    # createDataFrame (~1.8 s of Py4J/Arrow setup).
-    def _warm_kernel(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        _warm_kernel, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-    spark.createDataFrame([(0, 0)], "a long, b long").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    warm_up(spark, sf_dir)
 
     # host-speed proxy, measured warm at suite START (and again at
     # suite END below): drift comparisons across rounds normalize by
@@ -669,10 +635,21 @@ def main(queries=None, sf_dir=None, stop=True, emit=True) -> dict:
     # to a single exception).  A failing query is recorded in `errors`
     # and the suite keeps going; rc stays 0 unless SETUP fails.
     errors: dict[str, str] = {}
+    # Queries whose FIRST run built a process-staged fixture (a
+    # staging.stage() build: event logs, warehouse histories, persisted
+    # layouts, checkpointed graphs) that later runs reuse.  For these
+    # the bench separates FIXTURE-BUILD seconds (first run minus steady
+    # state) from QUERY seconds (the steady-state min), so a plan
+    # regression is visible through the fixture noise.
+    staged: set[str] = set()
 
     def _timed(name, fn):
         try:
-            timings[name] = round(min(_run(name, fn), _run(name, fn)), 2)
+            builds = len(staging.build_log())
+            first = _run(name, fn)
+            if len(staging.build_log()) > builds:
+                staged.add(name)
+            timings[name] = round(min(first, _run(name, fn)), 2)
         except Exception as exc:  # noqa: BLE001 — record and continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             timings.pop(name, None)
@@ -717,7 +694,7 @@ def main(queries=None, sf_dir=None, stop=True, emit=True) -> dict:
     # fixture/steady ratio would make a real 5x plan regression on
     # that query unflagable forever)
     def _steady(n: str, r: list[float]) -> list[float]:
-        if n in _STAGED_FIXTURE_QUERIES and len(r) > 1:
+        if n in staged and len(r) > 1:
             return r[1:]
         return r
 
@@ -735,7 +712,7 @@ def main(queries=None, sf_dir=None, stop=True, emit=True) -> dict:
     # steady-state min either way.
     fixture = {
         n: round(max(0.0, spreads[n][0] - min(spreads[n])), 2)
-        for n in sorted(_STAGED_FIXTURE_QUERIES)
+        for n in sorted(staged)
         if n in spreads
     }
     # flag → confirm → classify: query flags get a fresh re-measure at

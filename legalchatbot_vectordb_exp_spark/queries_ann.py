@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from legalchatbot_vectordb_exp_spark.functions.vector import dot
 from legalchatbot_vectordb_exp_spark.io_tables import load_table
 from legalchatbot_vectordb_exp_spark.registry import register, sql_dot
+from legalchatbot_vectordb_exp_spark.staging import fresh, scratch, stage
 
 N_PLANES = 8
 DIM = 64  # testdata embedding dimensionality (TESTDATA.md)
@@ -997,32 +998,28 @@ def _stage_layout(
     sf_dir: str,
     table: str,
     scratch_key: str,
-    staging: dict[str, str],
     keyed_fn,
     dim: int,
     holdout_pred=None,
 ):
     """Build-once-per-process protocol shared by every persisted IVF
-    layout (cell-major AND label-in-key): rmtree the stale layout,
+    layout (cell-major AND label-in-key): clear the stale layout,
     persist the keyed frame so the pandas-UDF assignment kernel runs
     once instead of per-action (create's distributed path runs three
     actions — validation agg, range-boundary sample, write), create
     (optionally minus a holdout, then merge it — the incremental-
-    ingest shape), and record the staging so repeat bench runs probe
-    the index at rest.  ``keyed_fn()`` returns the composite-keyed
-    frame; it is only invoked on a build."""
-    import shutil
-
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
+    ingest shape), and stage it so repeat bench runs probe the index
+    at rest.  ``keyed_fn()`` returns the composite-keyed frame; it is
+    only invoked on a build."""
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
 
-    warehouse = _scratch(sf_dir, scratch_key)
+    warehouse = scratch(sf_dir, scratch_key)
     coll = VersionedCollection(spark, warehouse, table)
-    if staging.get(sf_dir) != warehouse:
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)  # fresh layout per process
+
+    def build():
+        fresh(coll.path)  # fresh layout per process
         keyed = keyed_fn().persist()
         try:
             base = (
@@ -1040,7 +1037,9 @@ def _stage_layout(
                 coll.merge(keyed.filter(holdout_pred))
         finally:
             keyed.unpersist()
-        staging[sf_dir] = warehouse
+        return warehouse
+
+    stage(spark, sf_dir, scratch_key, build)
     return coll
 
 
@@ -1049,7 +1048,6 @@ def _ivf_layout_collection(
     sf_dir: str,
     table: str,
     scratch_key: str,
-    staging: dict[str, str],
     holdout_pred=None,
 ):
     """Build (once per process) the cell-major persisted IVF layout
@@ -1072,7 +1070,7 @@ def _ivf_layout_collection(
         )
 
     coll = _stage_layout(
-        spark, sf_dir, table, scratch_key, staging, keyed_fn,
+        spark, sf_dir, table, scratch_key, keyed_fn,
         dim=len(qvec), holdout_pred=holdout_pred,
     )
     return coll, qvec, probe
@@ -1099,11 +1097,6 @@ def _ivf_probe_top5(coll, qvec, probe) -> DataFrame:
 
 
 CELL_SHIFT = 2**32  # composite key: cluster_id * 2^32 + vec_id
-
-# sf_dir -> warehouse whose persisted-IVF layout is already built in
-# THIS process (repeat bench runs probe the index at rest instead of
-# rebuilding it; a fresh driver process always rebuilds)
-_IVF_PERSISTED_STAGING: dict[str, str] = {}
 
 
 @register(
@@ -1162,13 +1155,9 @@ def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     that should have been read, or a stale snapshot all fail the
     hash.  ``test_versioned_collection.py`` additionally pins that
     the probed scan OPENS fewer files than the snapshot holds."""
-    # write path once per process (the layout is deterministic for a
-    # given sf_dir — a production index at rest is not rebuilt per
-    # search; a fresh process, e.g. the correctness driver, rebuilds),
-    # then one stats-pruned range read per probed cell
+    # staged write path, then one stats-pruned range read per cell
     coll, qvec, probe = _ivf_layout_collection(
-        spark, sf_dir, "emb_ivf", "ivf_persisted",
-        _IVF_PERSISTED_STAGING,
+        spark, sf_dir, "emb_ivf", "ivf_persisted"
     )
     return _ivf_probe_top5(coll, qvec, probe)
 
@@ -1361,11 +1350,6 @@ def _knn_scored_topk(pairs: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-# sf_dir -> built graph for THIS process/session (the
-# _IVF_PERSISTED_STAGING pattern): the recall guard and repeat bench
-# runs reuse one build instead of re-running all KNN_ITERS rounds
-_KNN_GRAPH_STAGING: dict[str, DataFrame] = {}
-
 # bump for cache-layout changes; ALGORITHM changes are covered
 # automatically by _build_source_sig below (review finding: a
 # hand-bumped constant alone silently serves stale edges when someone
@@ -1434,8 +1418,6 @@ def _cached_edges(
     disables (build-mechanics tests measure the build itself)."""
     import shutil
 
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
-
     if os.environ.get("SPARK_GRAFT_GRAPH_CACHE", "1") == "0":
         return build_fn().localCheckpoint()
     if "src" in sig and sig["src"] is None:
@@ -1452,7 +1434,7 @@ def _cached_edges(
     path_tag = hashlib.sha256(
         os.path.abspath(sf_dir).encode()
     ).hexdigest()[:8]
-    cache = _scratch(sf_dir, f"graph_cache_{leaf}_{path_tag}")
+    cache = scratch(sf_dir, f"graph_cache_{leaf}_{path_tag}")
     sigfile = os.path.join(cache, "_signature.json")
     edges_dir = os.path.join(cache, "edges")
     try:
@@ -1467,8 +1449,7 @@ def _cached_edges(
         built.write.mode("overwrite").parquet(os.path.join(tmp, "edges"))
         with open(os.path.join(tmp, "_signature.json"), "w") as fh:
             json.dump(sig, fh)
-        if os.path.isdir(cache):
-            shutil.rmtree(cache)
+        fresh(cache)
         os.rename(tmp, cache)
     except Exception as exc:  # noqa: BLE001
         # cache write is best-effort: concurrent writers or a
@@ -1495,35 +1476,30 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists AT REST per sf_dir (:func:`_cached_edges`): a later
     process serves the stored index instead of rebuilding, the same
     build-once/query-many contract the persisted IVF layout already
-    keeps."""
-    staging = _KNN_GRAPH_STAGING
-    cached = staging.get(sf_dir)
-    if cached is not None:
-        try:
-            if cached.sparkSession is spark:
-                return cached
-        except Exception:
-            pass
-    graph = _cached_edges(
-        spark,
-        sf_dir,
-        "knn",
-        {
-            "emb": _emb_signature(sf_dir),
-            "k": KNN_K,
-            "iters": KNN_ITERS,
-            "src": _build_source_sig(
-                _knn_graph_build_uncached,
-                _knn_scored_topk,
-                make_ivf_assign,
-                ivf_mod_for,
-            ),
-            "v": _GRAPH_CACHE_VERSION,
-        },
-        lambda: _knn_graph_build_uncached(spark, sf_dir),
-    )
-    staging[sf_dir] = graph
-    return graph
+    keeps.  Staged per process, so the recall guard and repeat bench
+    runs reuse one build instead of re-running all KNN_ITERS rounds."""
+
+    def build():
+        return _cached_edges(
+            spark,
+            sf_dir,
+            "knn",
+            {
+                "emb": _emb_signature(sf_dir),
+                "k": KNN_K,
+                "iters": KNN_ITERS,
+                "src": _build_source_sig(
+                    _knn_graph_build_uncached,
+                    _knn_scored_topk,
+                    make_ivf_assign,
+                    ivf_mod_for,
+                ),
+                "v": _GRAPH_CACHE_VERSION,
+            },
+            lambda: _knn_graph_build_uncached(spark, sf_dir),
+        )
+
+    return stage(spark, sf_dir, "knn_graph", build)
 
 
 def _knn_graph_build_uncached(
@@ -1927,10 +1903,6 @@ def q_ann_graph_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- incremental IVF index
 
-# sf_dir -> warehouse with the two-commit incremental layout already
-# built in THIS process (same contract as _IVF_PERSISTED_STAGING)
-_IVF_INCR_STAGING: dict[str, str] = {}
-
 INCR_HOLDOUT_MOD = 23  # vec_id % 23 == 5 arrives as the second commit
 
 
@@ -1978,7 +1950,6 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and time travel keeps the pre-ingest index queryable."""
     coll, qvec, probe = _ivf_layout_collection(
         spark, sf_dir, "emb_ivf_incr", "ivf_incremental",
-        _IVF_INCR_STAGING,
         holdout_pred=(F.col("vec_id") % INCR_HOLDOUT_MOD == 5),
     )
     return _ivf_probe_top5(coll, qvec, probe)
@@ -2451,11 +2422,6 @@ LABEL_SHIFT = 2**24  # composite key: cluster*2^32 + label*2^24 + vec_id
 # driver SF and stress multiple; at production scale widen to 2^40/2^20
 # — the layout math is shift-agnostic)
 
-# sf_dir -> warehouse whose label-clustered IVF layout is already built
-# in THIS process (repeat bench runs probe the index at rest)
-_IVF_FILT_STAGING: dict[str, str] = {}
-
-
 def _ivf_filtered_layout(spark: SparkSession, sf_dir: str):
     """Build (once per process) the FILTER-OPTIMIZED persisted IVF
     layout — composite key ``cluster_id·2^32 + label·2^24 + vec_id``
@@ -2514,8 +2480,8 @@ def _ivf_filtered_layout(spark: SparkSession, sf_dir: str):
         )
 
     coll = _stage_layout(
-        spark, sf_dir, "emb_ivf_filt", "ivf_filtered",
-        _IVF_FILT_STAGING, keyed_fn, dim=len(qvec),
+        spark, sf_dir, "emb_ivf_filt", "ivf_filtered", keyed_fn,
+        dim=len(qvec),
     )
     return coll, qvec, probe
 
@@ -3119,12 +3085,6 @@ def _hnsw_sql(final_select: str) -> str:
     )
 
 
-# sf_dir -> final checkpointed beam for THIS process/session (the
-# _KNN_GRAPH_STAGING pattern): ann_hnsw_recall re-walks via
-# q_ann_hnsw_search and bench repeats twice — one walk serves all
-_HNSW_BEAM_STAGING: dict[str, DataFrame] = {}
-
-
 def _hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HNSW walk, Spark side: layer assignment → greedy descent
     over per-layer edge subsets → layer-0 beam walk.  Scale shape per
@@ -3134,13 +3094,6 @@ def _hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     an equi-join (bucketed at 100 TB).  Beam volume stays queries ×
     B × k per hop, corpus-independent — identical to the E13 walk,
     the hierarchy only swaps the seeding."""
-    cached = _HNSW_BEAM_STAGING.get(sf_dir)
-    if cached is not None:
-        try:
-            if cached.sparkSession is spark:
-                return cached
-        except Exception:
-            pass
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -3268,7 +3221,6 @@ def _hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
             beam = hop(beam, edges_l, HNSW_DESCENT_BEAM).localCheckpoint()
     for _ in range(KNN_SEARCH_HOPS):
         beam = hop(beam, graph, KNN_SEARCH_BEAM).localCheckpoint()
-    _HNSW_BEAM_STAGING[sf_dir] = beam
     return beam
 
 
@@ -3290,8 +3242,12 @@ def q_ann_hnsw_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     layers' edge subsets from the global entry point, then the
     layer-0 beam walk — the complete analogue of the reference's
     Qdrant index (`Qdrant/main.py:58-62`), hash-matched against a
-    DuckDB oracle replaying the identical build + descent + walk."""
-    beam = _hnsw_beam(spark, sf_dir)
+    DuckDB oracle replaying the identical build + descent + walk.  The
+    walk is staged per process: ann_hnsw_recall re-walks via this query
+    and bench repeats it — one walk serves all."""
+    beam = stage(
+        spark, sf_dir, "hnsw_beam", lambda: _hnsw_beam(spark, sf_dir)
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("node").asc()
     )
@@ -3628,11 +3584,6 @@ def _knn_incr_sql(final_select: str) -> str:
     )
 
 
-# sf_dir -> final merged graph staged per process (the base graph is
-# the SHARED _KNN_GRAPH_STAGING build — no second build, r17 item 3)
-_KNN_INCR_STAGING: dict[str, DataFrame] = {}
-
-
 def incr_new_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The derived insert batch: (query_id, qv) midpoints of adjacent
     sampled corpus vectors — Spark twin of ``_INCR_NEWQ_SQL``.
@@ -3669,6 +3620,17 @@ def incr_new_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The final merged graph, staged per process (its base graph is
+    the shared ``knn_graph_build`` stage — no second build)."""
+    return stage(
+        spark,
+        sf_dir,
+        "knn_graph_incremental",
+        lambda: _knn_graph_insert(spark, sf_dir),
+    )
+
+
+def _knn_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The post-insert graph, Spark side.  Incremental cost profile:
     the base graph is the one staged full-corpus build every graph
     consumer shares (zero marginal cost here); the batch's beam
@@ -3679,13 +3641,6 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's global re-rank holds because re-top-k of an unaffected
     node's existing k edges is the identity (same scores, same
     tie-breaks)."""
-    cached = _KNN_INCR_STAGING.get(sf_dir)
-    if cached is not None:
-        try:
-            if cached.sparkSession is spark:
-                return cached
-        except Exception:
-            pass
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -3770,14 +3725,12 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     updated_affected = _knn_scored_topk(affected_pairs, allemb)
     untouched = base.join(affected, "src", "anti")
-    final = (
+    return (
         untouched.select("src", "dst", "score")
         .union(updated_affected)
         .union(new_edges)
         .localCheckpoint()
     )
-    _KNN_INCR_STAGING[sf_dir] = final
-    return final
 
 
 @register(

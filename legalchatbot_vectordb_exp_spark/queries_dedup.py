@@ -25,6 +25,7 @@ from legalchatbot_vectordb_exp_spark.registry import (
     sql_dot,
     sql_words,
 )
+from legalchatbot_vectordb_exp_spark.staging import stage
 
 # shingles appearing in more docs than this are dropped from pairing
 # (stopword-shingle suppression; identical on both engines)
@@ -88,34 +89,43 @@ def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc rare-shingle counts (doc_sizes CTE) — n_docs rows,
-    CACHED (r21, guide §1.2): jaccard and containment each broadcast
-    this frame TWICE (doc_a and doc_b sides), and a broadcast exchange
-    builds its input independently — uncached, the groupBy re-ran the
-    shingle lineage four times per bench pass (~1 s each at sf0.1).
-    One aggregate now feeds all four broadcasts across both queries."""
-    sh = _spark_shingles(spark, sf_dir)
-    return (
-        sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-        .cache()
-    )
+    CACHED and staged per process (r21, guide §1.2): jaccard and
+    containment each broadcast this frame TWICE (doc_a and doc_b
+    sides), and a broadcast exchange builds its input independently —
+    uncached, the groupBy re-ran the shingle lineage four times per
+    bench pass (~1 s each at sf0.1).  One aggregate object now feeds
+    all four broadcasts across both queries."""
+
+    def build():
+        sh = _spark_shingles(spark, sf_dir)
+        return (
+            sh.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_sh"))
+            .cache()
+        )
+
+    return stage(spark, sf_dir, "dedup_doc_sizes", build)
 
 
 def _spark_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a < doc_b, shared) — shared-shingle counts from the
-    DF-capped shingle equi-join, CACHED: the Jaccard and containment
-    queries score the identical candidate frame, so the join+aggregate
-    runs once per session."""
-    sh = _spark_shingles(spark, sf_dir)
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    return (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .cache()
-    )
+    DF-capped shingle equi-join, CACHED and staged per process: the
+    Jaccard and containment queries score the identical candidate
+    frame, so the join+aggregate runs once."""
+
+    def build():
+        sh = _spark_shingles(spark, sf_dir)
+        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+        return (
+            a.join(b, "shingle")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("shared"))
+            .cache()
+        )
+
+    return stage(spark, sf_dir, "dedup_pair_counts", build)
 
 
 @register(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from legalchatbot_vectordb_exp_spark.io_tables import load_table
 from legalchatbot_vectordb_exp_spark.registry import register
+from legalchatbot_vectordb_exp_spark.staging import fresh, scratch, stage
 
 
 @register(
@@ -137,12 +138,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_RUN = {"n": 0}
 
-# Staged stream-log directories, keyed by (sf_dir, variant).  The
-# staged files are a pure deterministic projection of the source
-# table, so re-staging per invocation (bench runs every query twice)
-# would only re-measure test scaffolding, not the streaming engine.
-_STAGING_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _stage_ordered_log(
     spark: SparkSession, sf_dir: str, variant: str, frame: DataFrame
@@ -156,23 +151,26 @@ def _stage_ordered_log(
     does not guarantee an in-order replay (round-3 review, medium).
     Stamping mtimes explicitly (1 s apart, far above the ms
     granularity of the file listing) pins the replay order to the
-    event-time order under Spark's documented contract."""
-    key = (sf_dir, variant)
-    if key in _STAGING_CACHE:
-        return _STAGING_CACHE[key]
+    event-time order under Spark's documented contract.
+
+    The staged files are a pure deterministic projection of the source
+    table, so the log is staged once per process under the sf scratch
+    directory (re-staging per invocation would only re-measure test
+    scaffolding, not the streaming engine)."""
     import glob
     import os
-    import tempfile
     import time as _time
 
-    staging = tempfile.mkdtemp(prefix=f"events_{variant}_")
-    frame.write.mode("overwrite").parquet(staging)
-    parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-    base = _time.time() - 3600  # recent enough for maxFileAge
-    for i, path in enumerate(parts):
-        os.utime(path, (base + i, base + i))
-    _STAGING_CACHE[key] = staging
-    return staging
+    def build():
+        staging = fresh(scratch(sf_dir, f"events_{variant}"))
+        frame.write.parquet(staging)
+        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
+        base = _time.time() - 3600  # recent enough for maxFileAge
+        for i, path in enumerate(parts):
+            os.utime(path, (base + i, base + i))
+        return staging
+
+    return stage(spark, sf_dir, f"events_{variant}", build)
 
 
 def _replay_checkpoint_dir() -> str:

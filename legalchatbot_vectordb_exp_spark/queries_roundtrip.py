@@ -17,6 +17,7 @@ concurrent runs at different scale factors don't collide.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -37,12 +38,35 @@ from legalchatbot_vectordb_exp_spark.sources.csvio import (
 from legalchatbot_vectordb_exp_spark.sources.versioned import (
     VersionedCollection,
 )
+from legalchatbot_vectordb_exp_spark.staging import fresh, scratch, stage
 
 
-def _scratch(sf_dir: str, leaf: str) -> str:
-    base = os.environ.get("SPARK_GRAFT_TMP", "/tmp")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(base, "spark_graft_roundtrip", f"{tag}_{leaf}")
+def _sides(
+    frames: dict[str, DataFrame], value: str = "label", alias: str = "sum_label"
+) -> DataFrame:
+    """One ``(side, n_rows, <alias> = sum(value))`` row per named frame:
+    the readback of the warehouse-history queries below, which compare
+    several snapshots of one collection against the oracle at once."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            df.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.sum(value).cast("bigint").alias(alias),
+            ).select(F.lit(side).alias("side"), "*")
+            for side, df in frames.items()
+        ],
+    )
+
+
+def _sel(df: DataFrame, bump: int) -> DataFrame:
+    """Embeddings rows as collection rows ``(id, vector, label + bump)``
+    — the commit batches of the warehouse-history queries below."""
+    return df.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vector"),
+        (F.col("label") + bump).alias("label"),
+    )
 
 
 @register(
@@ -65,7 +89,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    path = _scratch(sf_dir, "csv_docs")
+    path = scratch(sf_dir, "csv_docs")
     write_cases_csv(docs, path)
     schema = StructType(
         [
@@ -108,7 +132,7 @@ def q_collection_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     props all survived.  metric='dot' keeps stored vectors bit-identical
     to the source (no re-normalization between engines)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    warehouse = _scratch(sf_dir, "collections")
+    warehouse = scratch(sf_dir, "collections")
     name = "emb_roundtrip"
     coll = VectorCollection(spark, warehouse, name)
 
@@ -174,13 +198,10 @@ def q_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrote copy-on-write instead of in place.  Every sum is cast
     BIGINT on both engines (no HUGEINT in oracle output — the r1-r6
     driver-red class)."""
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings")
-    warehouse = _scratch(sf_dir, "versioned")
+    warehouse = scratch(sf_dir, "versioned")
     coll = VersionedCollection(spark, warehouse, "emb_versions")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)  # fresh history per run
+    fresh(coll.path)  # fresh history per run
 
     dim = len(emb.select("embedding").head()[0])
     base = emb.filter(F.col("vec_id") < 400).select(
@@ -249,7 +270,7 @@ def q_bucketed_join_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     db = f"buckets_{tag}"
-    loc = _scratch(sf_dir, "buckets_db")
+    loc = scratch(sf_dir, "buckets_db")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     # a fresh session's in-memory catalog doesn't know tables a prior
     # run left on disk, so overwrite would act as CREATE and refuse the
@@ -313,7 +334,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both directions are scan-speed narrow projections; the
     written layout inherits the upstream partitioning (one file per
     task, no shuffle)."""
-    out = _scratch(sf_dir, "docs_jsonl")
+    out = scratch(sf_dir, "docs_jsonl")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
@@ -359,7 +380,7 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     data; the scan itself stays columnar and pruned.  Production
     pins the merged schema in a metastore; the per-read merge here is
     the self-describing-layout variant."""
-    out = _scratch(sf_dir, "schema_evolution")
+    out = scratch(sf_dir, "schema_evolution")
     docs = load_table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "lang", F.lit("v1").alias("writer")
@@ -405,7 +426,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: ORC, like parquet, carries per-stripe min/max indexes
     — predicate pushdown and column pruning work identically, and the
     write is embarrassingly parallel (one stripe set per task)."""
-    out = _scratch(sf_dir, "orc_orders")
+    out = scratch(sf_dir, "orc_orders")
     src = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 7 == 0
     )
@@ -474,7 +495,7 @@ def q_incremental_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(milli).alias(r_col),
         )
 
-    mv_path = _scratch(sf_dir, "mv_orders_by_priority")
+    mv_path = scratch(sf_dir, "mv_orders_by_priority")
     agg(base, "n_orders", "revenue_milli").write.mode("overwrite").parquet(
         mv_path
     )
@@ -549,13 +570,10 @@ def q_cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = [350,400) surviving with label+1000 and tag='m1',
     deletes = id%7=0 of the base with PREIMAGE values (original
     label, null tag — evolution backfills old rows as null)."""
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings")
-    warehouse = _scratch(sf_dir, "cdc")
+    warehouse = scratch(sf_dir, "cdc")
     coll = VersionedCollection(spark, warehouse, "emb_cdc")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)  # fresh history per run
+    fresh(coll.path)  # fresh history per run
 
     dim = len(emb.select("embedding").head()[0])
     base = emb.filter(F.col("vec_id") < 400).select(
@@ -633,13 +651,10 @@ def q_mv_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself, and the merge joins two ROLLUPS (group-key cardinality on
     both sides — a full outer, so no broadcast build, but never
     row-scale).  No snapshot is ever re-aggregated."""
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings")
-    warehouse = _scratch(sf_dir, "mv_cdc")
+    warehouse = scratch(sf_dir, "mv_cdc")
     coll = VersionedCollection(spark, warehouse, "emb_mv")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)  # fresh history per run
+    fresh(coll.path)  # fresh history per run
 
     dim = len(emb.select("embedding").head()[0])
     base = emb.filter(F.col("vec_id") < 400).select(
@@ -660,7 +675,7 @@ def q_mv_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     coll.delete_where("id % 7 = 0")
 
     grp = (F.col("id") % 10).cast("bigint").alias("grp")
-    mv_path = _scratch(sf_dir, "mv_cdc_view")
+    mv_path = scratch(sf_dir, "mv_cdc_view")
     (
         coll.read(version=0)
         .groupBy(grp)
@@ -765,8 +780,6 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates per version — a wrong delta sign, a missed preimage,
     a commit split across micro-batches, or a watermark off-by-one
     changes the hash."""
-    import shutil
-
     from legalchatbot_vectordb_exp_spark.streaming.ingest import (
         read_changes_stream,
         stage_changes_feed,
@@ -775,37 +788,26 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         _replay_checkpoint_dir,
     )
 
-    # The staged commit log is deterministic for a given sf_dir, so —
-    # like the events replay's _STAGING_CACHE — build the history and
-    # stage it ONCE PER PROCESS and let repeat runs replay the same
-    # log (a production CDF stream doesn't rebuild the table per
-    # read either; the log exists).  Process-local on purpose: a
-    # fresh process (the correctness driver) always rebuilds.
-    staging = _CDF_STAGING.get(sf_dir)
-    if staging is None:
+    # The staged commit log is deterministic for a given sf_dir, so the
+    # history is built and staged once per process and repeat runs
+    # replay the same log (a production CDF stream doesn't rebuild the
+    # table per read either; the log exists).
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        warehouse = _scratch(sf_dir, "cdf_stream")
+        warehouse = scratch(sf_dir, "cdf_stream")
         coll = VersionedCollection(spark, warehouse, "emb_cdf")
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)  # fresh history per process
+        fresh(coll.path)  # fresh history per process
 
         dim = len(emb.select("embedding").head()[0])
 
-        def sel(df, bump):
-            return df.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vector"),
-                (F.col("label") + bump).alias("label"),
-            )
-
         coll.create(
-            sel(emb.filter(F.col("vec_id") < 400), 0),
+            _sel(emb.filter(F.col("vec_id") < 400), 0),
             dim=dim,
             metric="dot",
             normalize=False,
         )
         coll.merge(
-            sel(
+            _sel(
                 emb.filter(
                     (F.col("vec_id") >= 350) & (F.col("vec_id") < 450)
                 ),
@@ -814,7 +816,7 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         coll.delete_where("id % 7 = 0")
         coll.merge(
-            sel(
+            _sel(
                 emb.filter(
                     (F.col("vec_id") >= 100) & (F.col("vec_id") < 110)
                 ),
@@ -822,13 +824,12 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # sentinel commit: only advances the terminal watermark
-        coll.merge(sel(emb.filter(F.col("vec_id") < 5), 9000))
+        coll.merge(_sel(emb.filter(F.col("vec_id") < 5), 9000))
 
-        staging = _scratch(sf_dir, "cdf_stream_log")
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)  # re-stage against fresh history
-        stage_changes_feed(coll, 0, 4, staging_dir=staging)
-        _CDF_STAGING[sf_dir] = staging
+        staging = fresh(scratch(sf_dir, "cdf_stream_log"))
+        return stage_changes_feed(coll, 0, 4, staging_dir=staging)
+
+    staging = stage(spark, sf_dir, "cdf_stream", build)
 
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"),
@@ -903,7 +904,6 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CDF_RUN = 0
-_CDF_STAGING: dict[str, str] = {}
 
 
 @register(
@@ -931,13 +931,10 @@ def q_zorder_recluster_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so a file wrongly pruned by the col_stats bounds (rows
     silently missing) fails the hash; the pruning RATIO itself is
     pinned by ``test_recluster_zorder_prunes_on_both_columns``."""
-    import shutil
-
     emb = load_table(spark, sf_dir, "embeddings")
-    warehouse = _scratch(sf_dir, "zorder_read")
+    warehouse = scratch(sf_dir, "zorder_read")
     coll = VersionedCollection(spark, warehouse, "emb_z")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)  # fresh layout per run
+    fresh(coll.path)  # fresh layout per run
 
     dim = len(emb.select("embedding").head()[0])
     keyed = emb.select(
@@ -961,8 +958,6 @@ def q_zorder_recluster_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the versioned sink's change feed
 
 _IDX_BANDS = 4  # bands of 2 minhash rows each (N_MINHASH = 8)
-_IDX_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
-
 
 def _index_corpus_sql() -> str:
     """The final corpus state, reconstructed relationally: corpus =
@@ -1093,15 +1088,12 @@ def q_dedup_index_cdc_maintain(
     corpus.  Commits ride the small-batch fused path at this SF; at
     production sizes the same history runs the distributed COW path
     unchanged."""
-    import shutil
-
-    # deterministic history for a given sf_dir — like cdf_stream_fold's
-    # staged log, build it ONCE PER PROCESS (a production index doesn't
-    # rebuild the table per maintenance cycle; the history exists).  A
-    # fresh process (the correctness driver) always rebuilds.
-    warehouse = _scratch(sf_dir, "dedup_idx_cdc")
+    # the history is staged (a production index doesn't rebuild the
+    # table per maintenance cycle; the history exists)
+    warehouse = scratch(sf_dir, "dedup_idx_cdc")
     coll = VersionedCollection(spark, warehouse, "docs_idx")
-    if _IDX_HISTORY.get(sf_dir) != warehouse:
+
+    def build():
         docs = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 8 == 0)
@@ -1111,8 +1103,7 @@ def q_dedup_index_cdc_maintain(
                 F.array(F.col("n_chars").cast("float")).alias("vector"),
             )
         )
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)  # fresh history per process
+        fresh(coll.path)  # fresh history per process
 
         coll.create(
             docs.filter(F.col("id") % 5 != 0),
@@ -1133,11 +1124,13 @@ def q_dedup_index_cdc_maintain(
                 F.col("id").alias("doc_id"), "text"
             )
         ).write.mode("overwrite").parquet(
-            _scratch(sf_dir, "dedup_idx_bands")
+            scratch(sf_dir, "dedup_idx_bands")
         )
-        _IDX_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    index_v0 = spark.read.parquet(_scratch(sf_dir, "dedup_idx_bands"))
+    stage(spark, sf_dir, "dedup_idx_cdc", build)
+
+    index_v0 = spark.read.parquet(scratch(sf_dir, "dedup_idx_bands"))
 
     # the feed is consumed by both the retirement and arrival branches
     # — cache the (touch-set-sized) fold result so the manifest-diff
@@ -1166,8 +1159,6 @@ def q_dedup_index_cdc_maintain(
 
 # --------------------------------------------------------------- E11
 # clone_diverge — zero-copy branch + independent divergence
-
-_CLONE_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1214,32 +1205,22 @@ def q_clone_diverge(spark: SparkSession, sf_dir: str) -> DataFrame:
     links, zero data bytes); each divergent commit is ordinary COW on
     its own manifest log.  History and clone are built once per
     process (the driver rebuilds fresh)."""
-    import shutil
-
-    warehouse = _scratch(sf_dir, "clone_diverge")
+    warehouse = scratch(sf_dir, "clone_diverge")
     src = VersionedCollection(spark, warehouse, "cd_src")
     br = VersionedCollection(spark, warehouse, "cd_branch")
-    if _CLONE_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)  # fresh source + branch per process
+
+    def build():
+        fresh(warehouse)  # fresh source + branch per process
         emb = load_table(spark, sf_dir, "embeddings")
-
-        def sel(df, bump):
-            return df.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vector"),
-                (F.col("label") + bump).alias("label"),
-            )
-
         dim = len(emb.select("embedding").head()[0])
         src.create(
-            sel(emb.filter(F.col("vec_id") < 200), 0),
+            _sel(emb.filter(F.col("vec_id") < 200), 0),
             dim=dim,
             metric="dot",
             normalize=False,
         )
         src.merge(
-            sel(
+            _sel(
                 emb.filter(
                     (F.col("vec_id") >= 150) & (F.col("vec_id") < 250)
                 ),
@@ -1247,31 +1228,23 @@ def q_clone_diverge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         br = src.clone("cd_branch")  # branch at source v1
-        br.merge(sel(emb.filter(F.col("vec_id") < 50), 5000))
+        br.merge(_sel(emb.filter(F.col("vec_id") < 50), 5000))
         src.delete_where("id % 3 = 0")
-        _CLONE_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    agg = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("label").cast("bigint").alias("sum_label"),
-    ]
-    return (
-        src.read().agg(*agg).select(F.lit("source").alias("side"), "*")
-        .unionByName(
-            br.read().agg(*agg).select(F.lit("branch").alias("side"), "*")
-        )
-        .unionByName(
-            br.read(version=0)
-            .agg(*agg)
-            .select(F.lit("branch@v0").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "clone_diverge", build)
+
+    return _sides(
+        {
+            "source": src.read(),
+            "branch": br.read(),
+            "branch@v0": br.read(version=0),
+        }
     )
 
 
 # --------------------------------------------------------------- E11
 # restore_rollback — metadata-only rollback through the oracle gate
-
-_RESTORE_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1310,31 +1283,21 @@ def q_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     are copied from the target — zero data I/O at any table size; the
     reads after it are ordinary snapshot scans.  History is built once
     per process (the driver rebuilds fresh)."""
-    import shutil
-
-    warehouse = _scratch(sf_dir, "restore_rollback")
+    warehouse = scratch(sf_dir, "restore_rollback")
     c = VersionedCollection(spark, warehouse, "rr")
-    if _RESTORE_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
-
-        def sel(df, bump):
-            return df.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vector"),
-                (F.col("label") + bump).alias("label"),
-            )
-
         dim = len(emb.select("embedding").head()[0])
         c.create(
-            sel(emb.filter(F.col("vec_id") < 200), 0),
+            _sel(emb.filter(F.col("vec_id") < 200), 0),
             dim=dim,
             metric="dot",
             normalize=False,
         )
         c.merge(
-            sel(
+            _sel(
                 emb.filter(
                     (F.col("vec_id") >= 150) & (F.col("vec_id") < 250)
                 ),
@@ -1344,31 +1307,21 @@ def q_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.delete_where("id % 4 = 0")  # v2 — the state restore undoes
         out = c.restore(1)
         assert out["restored_from"] == 1 and out["version"] == 3
-        _RESTORE_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    agg = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("label").cast("bigint").alias("sum_label"),
-    ]
-    return (
-        c.read().agg(*agg).select(F.lit("latest").alias("side"), "*")
-        .unionByName(
-            c.read(version=2)
-            .agg(*agg)
-            .select(F.lit("pre_restore").alias("side"), "*")
-        )
-        .unionByName(
-            c.read(version=0)
-            .agg(*agg)
-            .select(F.lit("v0").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "restore_rollback", build)
+
+    return _sides(
+        {
+            "latest": c.read(),
+            "pre_restore": c.read(version=2),
+            "v0": c.read(version=0),
+        }
     )
 
 
 # --------------------------------------------------------------- E11
 # concurrent_merge_rebase — conflict-detection protocol, oracle-gated
-
-_REBASE_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1414,29 +1367,19 @@ def q_concurrent_merge_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch set) driver arithmetic) plus ONE manifest write — disjoint
     multi-writer ingest commits at the log's sequencing rate, never
     re-running data jobs (`SCALE.md §14`)."""
-    import shutil
-
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
 
-    warehouse = _scratch(sf_dir, "concurrent_merge_rebase")
+    warehouse = scratch(sf_dir, "concurrent_merge_rebase")
     c = VersionedCollection(spark, warehouse, "cmr")
-    if _REBASE_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
-
-        def sel(df, bump):
-            return df.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vector"),
-                (F.col("label") + bump).alias("label"),
-            )
-
         dim = len(emb.select("embedding").head()[0])
         c.create(
-            sel(emb.filter(F.col("vec_id") < 200), 0),
+            _sel(emb.filter(F.col("vec_id") < 200), 0),
             dim=dim,
             metric="dot",
             normalize=False,
@@ -1460,7 +1403,7 @@ def q_concurrent_merge_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fired.append(1)
                 winner = VersionedCollection(spark, warehouse, "cmr")
                 winner.merge(
-                    sel(
+                    _sel(
                         emb.filter(
                             (F.col("vec_id") >= 150)
                             & (F.col("vec_id") < 200)
@@ -1473,7 +1416,7 @@ def q_concurrent_merge_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
         VersionedCollection._write_payload = hooked
         try:
             loser.merge(
-                sel(emb.filter(F.col("vec_id") < 50), 5000)
+                _sel(emb.filter(F.col("vec_id") < 50), 5000)
             )
         finally:
             VersionedCollection._write_payload = orig
@@ -1487,26 +1430,15 @@ def q_concurrent_merge_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "loser reran its data job: "
                 f"{loser.io_counters['data_writes']} writes"
             )
-        _REBASE_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    agg = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("label").cast("bigint").alias("sum_label"),
-    ]
-    return (
-        c.read().agg(*agg).select(F.lit("final").alias("side"), "*")
-        .unionByName(
-            c.read(version=1)
-            .agg(*agg)
-            .select(F.lit("winner_v1").alias("side"), "*")
-        )
-    )
+    stage(spark, sf_dir, "concurrent_merge_rebase", build)
+
+    return _sides({"final": c.read(), "winner_v1": c.read(version=1)})
 
 
 # --------------------------------------------------------------- E11
 # mor_delete_read — merge-on-read deletion vectors, oracle-gated
-
-_MOR_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1567,17 +1499,15 @@ def q_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered file materializes the DV away (`SCALE.md §14`).  The
     reference's only delete is the whole-collection recreate
     (`Qdrant/VectorDB/Database.py:10-14`)."""
-    import shutil
-
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
 
-    warehouse = _scratch(sf_dir, "mor_delete_read")
+    warehouse = scratch(sf_dir, "mor_delete_read")
     c = VersionedCollection(spark, warehouse, "mor")
-    if _MOR_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
 
         def sel(df, bump):
@@ -1620,31 +1550,21 @@ def q_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.delete_where("id < 10", mode="mor")
         if not c.manifest(3).get("dv"):
             raise AssertionError("second MOR delete wrote no dv")
-        _MOR_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    agg = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("label").cast("bigint").alias("sum_label"),
-    ]
-    return (
-        c.read().agg(*agg).select(F.lit("final").alias("side"), "*")
-        .unionByName(
-            c.read(version=1)
-            .agg(*agg)
-            .select(F.lit("v1").alias("side"), "*")
-        )
-        .unionByName(
-            c.changes(0, 3)
-            .agg(*agg)
-            .select(F.lit("cdf").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "mor_delete_read", build)
+
+    return _sides(
+        {
+            "final": c.read(),
+            "v1": c.read(version=1),
+            "cdf": c.changes(0, 3),
+        }
     )
 
 
 # ---------------------------------------------------------------------
 # update_where_read — row-level UPDATE (cow + mor), oracle-gated
-
-_UPD_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1709,13 +1629,11 @@ def q_update_where_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     match (discovery scan is predicate-pruned).  The reference's only
     mutation is the whole-collection recreate
     (`Qdrant/VectorDB/Database.py:10-14`)."""
-    import shutil
-
-    warehouse = _scratch(sf_dir, "update_where_read")
+    warehouse = scratch(sf_dir, "update_where_read")
     c = VersionedCollection(spark, warehouse, "upd")
-    if _UPD_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").head()[0])
         c.create(
@@ -1751,33 +1669,21 @@ def q_update_where_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "compact did not materialize the deletion vector"
             )
-        _UPD_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    agg = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum("label").cast("bigint").alias("sum_label"),
-    ]
-    return (
-        c.read()
-        .agg(*agg)
-        .select(F.lit("final").alias("side"), "*")
-        .unionByName(
-            c.read(version=1)
-            .agg(*agg)
-            .select(F.lit("v1").alias("side"), "*")
-        )
-        .unionByName(
-            c.changes(0, 3, preimages=True)
-            .agg(*agg)
-            .select(F.lit("cdf").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "update_where_read", build)
+
+    return _sides(
+        {
+            "final": c.read(),
+            "v1": c.read(version=1),
+            "cdf": c.changes(0, 3, preimages=True),
+        }
     )
 
 
 # ---------------------------------------------------------------------
 # column_mapping_read — rename/drop column as metadata-only commits
-
-_CMAP_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1834,13 +1740,11 @@ def q_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size — no data I/O on a 100 TB table — and the mapped read
     is a scan-stage aliasing projection Catalyst prunes/pushes
     through (zero extra exchanges)."""
-    import shutil
-
-    warehouse = _scratch(sf_dir, "column_mapping_read")
+    warehouse = scratch(sf_dir, "column_mapping_read")
     c = VersionedCollection(spark, warehouse, "cmap")
-    if _CMAP_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").head()[0])
         c.create(
@@ -1881,39 +1785,24 @@ def q_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("vec_id") * 3).cast("long").alias("score"),
             )
         )
-        _CMAP_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    return (
-        c.read()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("score").cast("bigint").alias("sum_score"),
-        )
-        .select(F.lit("final").alias("side"), "*")
-        .unionByName(
-            c.read(version=0)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(F.col("label") + F.col("grade"))
-                .cast("bigint")
-                .alias("sum_score"),
-            )
-            .select(F.lit("v0").alias("side"), "*")
-        )
-        .unionByName(
-            c.changes(0, 3)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum("score").cast("bigint").alias("sum_score"),
-            )
-            .select(F.lit("cdf").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "column_mapping_read", build)
+
+    return _sides(
+        {
+            "final": c.read(),
+            "v0": c.read(version=0).withColumn(
+                "score", F.col("label") + F.col("grade")
+            ),
+            "cdf": c.changes(0, 3),
+        },
+        "score",
+        "sum_score",
     )
 
 
 # column_mapping_time_travel — restore/clone across rename (round-15)
-
-_CMTT_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
 
 
 @register(
@@ -1975,14 +1864,12 @@ def q_column_mapping_time_travel(
     I/O at any table size; the mapped read stays a scan-stage alias
     projection.  Reference has no schema DDL at all
     (`Qdrant/llm.py:89-91` lazily adds a column)."""
-    import shutil
-
-    warehouse = _scratch(sf_dir, "column_mapping_time_travel")
+    warehouse = scratch(sf_dir, "column_mapping_time_travel")
     c = VersionedCollection(spark, warehouse, "cmtt")
     cl = VersionedCollection(spark, warehouse, "cmtt_clone")
-    if _CMTT_HISTORY.get(sf_dir) != warehouse:
-        if os.path.isdir(warehouse):
-            shutil.rmtree(warehouse)
+
+    def build():
+        fresh(warehouse)
         emb = load_table(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").head()[0])
         c.create(
@@ -2026,31 +1913,18 @@ def q_column_mapping_time_travel(
                 "restore across rename must resolve the OLD names: "
                 f"got {sorted(restored_cols)}"
             )
-        _CMTT_HISTORY[sf_dir] = warehouse
+        return warehouse
 
-    return (
-        c.read()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("label") + F.col("grade"))
-            .cast("bigint")
-            .alias("sum_val"),
-        )
-        .select(F.lit("restored").alias("side"), "*")
-        .unionByName(
-            c.read(version=2)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum("score").cast("bigint").alias("sum_val"),
-            )
-            .select(F.lit("pre_restore").alias("side"), "*")
-        )
-        .unionByName(
-            cl.read()
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum("score").cast("bigint").alias("sum_val"),
-            )
-            .select(F.lit("clone").alias("side"), "*")
-        )
+    stage(spark, sf_dir, "column_mapping_time_travel", build)
+
+    return _sides(
+        {
+            "restored": c.read().withColumn(
+                "score", F.col("label") + F.col("grade")
+            ),
+            "pre_restore": c.read(version=2),
+            "clone": cl.read(),
+        },
+        "score",
+        "sum_val",
     )

@@ -42,6 +42,7 @@ from legalchatbot_vectordb_exp_spark.registry import (
     register,
     sql_dot,
 )
+from legalchatbot_vectordb_exp_spark.staging import fresh, scratch, stage
 
 # The fixed sparse query: integer term weights (exact replay).  Terms
 # deliberately overlap bm25_rank's so the two lexical scorers are
@@ -108,25 +109,18 @@ _POSTINGS_SQL = """
     )"""
 
 
-# sf_dir -> checkpointed posting list for THIS process/session: four
-# registered queries (topk, idf, both hybrids) and their bench repeats
-# all consume the same relation — one explode+aggregate serves all
-_POSTINGS_STAGING: dict[str, DataFrame] = {}
-
-
 def staged_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cached = _POSTINGS_STAGING.get(sf_dir)
-    if cached is not None:
-        try:
-            if cached.sparkSession is spark:
-                return cached
-        except Exception:
-            pass
-    out = _postings(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint()
-    _POSTINGS_STAGING[sf_dir] = out
-    return out
+    """Checkpointed posting list, staged per process: four registered
+    queries (topk, idf, both hybrids) and their bench repeats all
+    consume the same relation — one explode+aggregate serves all."""
+    return stage(
+        spark,
+        sf_dir,
+        "sparse_postings",
+        lambda: _postings(
+            load_table(spark, sf_dir, "documents")
+        ).localCheckpoint(),
+    )
 
 
 def _sparse_query_df(spark: SparkSession) -> DataFrame:
@@ -193,35 +187,29 @@ def q_ann_sparse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> warehouse whose term-bucketed posting layout is already
-# built in THIS process (repeat bench runs search the index at rest)
-_SPARSE_STAGING: dict[str, str] = {}
-
-
 def sparse_layout(spark: SparkSession, sf_dir: str):
     """Build (once per process) the AT-REST sparse layout: the posting
     list written through ``VectorCollection.create_sparse`` —
     partitioned by ``term_id % n_buckets`` so a query's term equi-join
-    prunes partitions before any IO."""
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
+    prunes partitions before any IO.  Repeat runs search the index at
+    rest."""
     from legalchatbot_vectordb_exp_spark.sources.collection import (
         VectorCollection,
     )
 
-    warehouse = _scratch(sf_dir, "sparse")
+    warehouse = scratch(sf_dir, "sparse")
     coll = VectorCollection(spark, warehouse, "doc_postings")
-    if _SPARSE_STAGING.get(sf_dir) != warehouse:
-        import shutil
-        import os
 
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)
+    def build():
+        fresh(coll.path)
         docs = load_table(spark, sf_dir, "documents")
         coll.create_sparse(
             _postings(docs), id_col="doc_id", term_col="term_id",
             weight_col="w",
         )
-        _SPARSE_STAGING[sf_dir] = warehouse
+        return warehouse
+
+    stage(spark, sf_dir, "sparse", build)
     return coll
 
 
@@ -601,9 +589,6 @@ def q_ann_sparse_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_knn_graph_incremental; dedup bands: dedup_index_cdc_maintain;
 # sparse postings: here).
 
-_SPARSE_IDX_HISTORY: dict[str, str] = {}  # sf_dir -> built warehouse
-
-
 def _sparse_idx_corpus_sql() -> str:
     """Final corpus state, reconstructed relationally: corpus =
     doc_id % 8 = 1; v1 merge appended ' rev2' to docs with
@@ -670,17 +655,14 @@ def q_sparse_index_cdc_maintain(
     Scale shape: feed = manifest-diff touch set only; retirement
     anti-join keys on the index's own doc_id (bucketed/co-located at
     rest); re-tokenize cost ∝ changed docs, never the corpus."""
-    import os
-    import shutil
-
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
 
-    warehouse = _scratch(sf_dir, "sparse_idx_cdc")
+    warehouse = scratch(sf_dir, "sparse_idx_cdc")
     coll = VersionedCollection(spark, warehouse, "docs_sparse_idx")
-    if _SPARSE_IDX_HISTORY.get(sf_dir) != warehouse:
+
+    def build():
         docs = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 8 == 1)
@@ -690,8 +672,7 @@ def q_sparse_index_cdc_maintain(
                 F.array(F.col("n_chars").cast("float")).alias("vector"),
             )
         )
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)  # fresh history per process
+        fresh(coll.path)  # fresh history per process
         coll.create(
             docs.filter(F.col("id") % 5 != 0),
             dim=1,
@@ -709,12 +690,14 @@ def q_sparse_index_cdc_maintain(
                 F.col("id").alias("doc_id"), "text"
             )
         ).write.mode("overwrite").parquet(
-            _scratch(sf_dir, "sparse_idx_postings")
+            scratch(sf_dir, "sparse_idx_postings")
         )
-        _SPARSE_IDX_HISTORY[sf_dir] = warehouse
+        return warehouse
+
+    stage(spark, sf_dir, "sparse_idx_cdc", build)
 
     index_v0 = spark.read.parquet(
-        _scratch(sf_dir, "sparse_idx_postings")
+        scratch(sf_dir, "sparse_idx_postings")
     )
     feed = coll.changes(0, 2).cache()
     retired = feed.filter(
@@ -763,31 +746,21 @@ SPARSE_INCR_MOD = 31
 SPARSE_INCR_UPD = 1  # doc_id % 31 == 1 -> text || ' rev2'
 SPARSE_INCR_DEL = 2  # doc_id % 31 == 2 -> deleted
 
-# sf_dir -> {"warehouse": ..., "touched_buckets": ..., "n_buckets": ...}
-_SPARSE_LAYOUT_INCR: dict[str, dict] = {}
-
-
 def sparse_incr_layout(spark: SparkSession, sf_dir: str):
     """Build (once per process) the v0 bucketed layout over the
     ``doc_id % 8 = 1`` corpus, then apply the change batch through
     ``merge_sparse``: updated docs' OLD postings retire (the change
     feed's preimage is the bucket locator — no corpus scan), deleted
-    docs' postings retire, updated docs' NEW postings append.  The
-    merge stats land in ``_SPARSE_LAYOUT_INCR`` so tests can pin the
-    touched-bucket count."""
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
+    docs' postings retire, updated docs' NEW postings append."""
     from legalchatbot_vectordb_exp_spark.sources.collection import (
         VectorCollection,
     )
 
-    warehouse = _scratch(sf_dir, "sparse_incr")
+    warehouse = scratch(sf_dir, "sparse_incr")
     coll = VectorCollection(spark, warehouse, "doc_postings_incr")
-    if _SPARSE_LAYOUT_INCR.get(sf_dir, {}).get("warehouse") != warehouse:
-        import os
-        import shutil
 
-        if os.path.isdir(coll.path):
-            shutil.rmtree(coll.path)
+    def build():
+        fresh(coll.path)
         v0 = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 8 == 1)
@@ -810,8 +783,10 @@ def sparse_incr_layout(spark: SparkSession, sf_dir: str):
                 "text", F.concat(F.col("text"), F.lit(" rev2"))
             )
         )
-        stats = coll.merge_sparse(retire, add)
-        _SPARSE_LAYOUT_INCR[sf_dir] = {"warehouse": warehouse, **stats}
+        coll.merge_sparse(retire, add)
+        return warehouse
+
+    stage(spark, sf_dir, "sparse_incr", build)
     return coll
 
 

@@ -205,9 +205,11 @@ def stage_changes_feed(
         wait at small change volumes, and the driver otherwise runs
         them strictly back-to-back.  Each file is stamped with its
         commit-order mtime (base_t + tv, 1 s apart — ms-granularity
-        listing) IMMEDIATELY after the rename makes it visible:
-        base_t is fixed up front, so the stamps are thread-safe and a
-        file is never observable with its raw write mtime.  A lister
+        listing) while it is still the temp part, BEFORE the rename
+        makes it visible: rename keeps the inode's mtime, so a file
+        is never observable under ``staging_dir`` with its raw write
+        mtime, and base_t is fixed up front, so the stamps are
+        thread-safe.  A lister
         racing the pool can still see span v+2 before v+1 exists —
         with concurrent staging, start/resume streams only after this
         function returns (the replay queries all do)."""
@@ -225,8 +227,8 @@ def stage_changes_feed(
         tmp = dest + ".tmpdir"
         feed.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = sorted(_glob.glob(os.path.join(tmp, "part-*")))[0]
+        os.utime(part, (base_t + tv, base_t + tv))
         os.replace(part, dest)
-        os.utime(dest, (base_t + tv, base_t + tv))
         shutil.rmtree(tmp, ignore_errors=True)
 
     spans = list(range(from_version, to_version))

@@ -203,20 +203,19 @@ def measure_graph_insert(spark, sf_dir: str) -> dict:
     n/29, so absolute cost grows with the corpus but the
     insert/rebuild ratio must stay flat — a rebuild-in-disguise would
     trend toward 1)."""
+    from legalchatbot_vectordb_exp_spark import staging
     from legalchatbot_vectordb_exp_spark.queries_ann import (
-        _KNN_GRAPH_STAGING,
-        _KNN_INCR_STAGING,
         knn_graph_build,
         knn_graph_incremental,
     )
 
-    # fresh per tier: the staging dicts are keyed by sf_dir, and each
+    # fresh per tier: staged fixtures are keyed by sf_dir, and each
     # tier uses its own replica dir, so stale entries cannot leak —
-    # but drop any prior entry for THIS dir to re-measure honestly.
-    # The base graph is the SHARED full-corpus build (r18): the probe
-    # measures it as the "build" term, then the insert phase alone.
-    _KNN_GRAPH_STAGING.pop(sf_dir, None)
-    _KNN_INCR_STAGING.pop(sf_dir, None)
+    # but drop every staged value to re-measure honestly.  The base
+    # graph is the SHARED full-corpus build (r18): the probe measures
+    # it as the "build" term, then the insert phase alone.
+    staging.clear()
+    builds = len(staging.build_log())
     before = _stages(spark)
     t0 = time.perf_counter()
     knn_graph_build(spark, sf_dir).write.mode("overwrite").format(
@@ -230,6 +229,8 @@ def measure_graph_insert(spark, sf_dir: str) -> dict:
     ).format("noop").save()
     insert_wall = time.perf_counter() - t0
     after = _stages(spark)
+    built = [name for name, _, _ in staging.build_log()[builds:]]
+    assert built == ["knn_graph", "knn_graph_incremental"], built
     build_bytes = sum(
         v for k, v in mid.items() if k not in before
     )

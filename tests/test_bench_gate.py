@@ -305,11 +305,42 @@ def test_end_to_end_regression_section_fires_at_matching_sf(spark):
     assert len(stats) == 3 and stats[0] <= stats[1] <= stats[2]
 
 
-def test_fixture_first_run_excluded_from_variance():
+def test_fixture_first_run_excluded_from_variance(spark):
     """Staged-fixture queries' recorded spread must come from steady
     repeats only — folding the one-time build into variance would make
-    the regression gate's noise band swallow real regressions."""
-    assert "ann_knn_graph" in bench._STAGED_FIXTURE_QUERIES
+    the regression gate's noise band swallow real regressions.  A query
+    counts as staged when its first run added a build-log entry; a
+    query whose first run is just as slow but built nothing keeps all
+    of its runs and gets no fixture entry."""
+    import time
+
+    from legalchatbot_vectordb_exp_spark import staging
+
+    def _staged(spark, sf_dir):
+        staging.stage(
+            spark, sf_dir, "bench_gate_fixture", lambda: time.sleep(1.0)
+        )
+        return _good(spark, sf_dir)
+
+    calls = []
+
+    def _slow_first(spark, sf_dir):
+        calls.append(1)
+        if len(calls) == 1:
+            time.sleep(1.0)
+        return _good(spark, sf_dir)
+
+    payload = bench.main(
+        queries={"staged": _staged, "slow_first": _slow_first},
+        sf_dir=SF_DIR,
+        stop=False,
+        emit=False,
+    )
+    assert set(payload["fixture"]) == {"staged"}
+    assert payload["fixture"]["staged"] >= 0.9
+    assert payload["stats"]["staged"][2] >= 1.0  # the build run is kept
+    assert payload["variance"]["staged"] < 5.0
+    assert payload["variance"]["slow_first"] > 5.0
     samples = [25.0, 1.0, 1.1]  # build, steady, steady
     steady = samples[1:]
     assert round(max(steady) / min(steady), 2) == 1.1

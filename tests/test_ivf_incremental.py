@@ -13,9 +13,7 @@ sys.path.insert(
 from legalchatbot_vectordb_exp_spark.queries_ann import (  # noqa: E402
     q_ann_ivf_incremental,
 )
-from legalchatbot_vectordb_exp_spark.queries_roundtrip import (  # noqa: E402
-    _scratch,
-)
+from legalchatbot_vectordb_exp_spark.staging import scratch  # noqa: E402
 from legalchatbot_vectordb_exp_spark.sources.versioned import (  # noqa: E402
     VersionedCollection,
 )
@@ -29,7 +27,7 @@ def test_two_commit_shape_and_pruned_merge(spark):
     res = q_ann_ivf_incremental(spark, SF_DIR).collect()
     assert len(res) == 5
     coll = VersionedCollection(
-        spark, _scratch(SF_DIR, "ivf_incremental"), "emb_ivf_incr"
+        spark, scratch(SF_DIR, "ivf_incremental"), "emb_ivf_incr"
     )
     # exactly two commits: the base build and the incremental ingest
     assert coll.versions() == [0, 1]

@@ -20,13 +20,13 @@ from legalchatbot_vectordb_exp_spark.queries_ann import (  # noqa: E402
     KNN_ITERS,
     KNN_K,
     KNN_RECALL_FLOOR,
-    _KNN_GRAPH_STAGING,
     knn_graph_build,
     q_ann_knn_graph,
     q_ann_knn_graph_recall,
 )
 from tests.oracle_harness import duckdb_conn, compare  # noqa: E402
 from legalchatbot_vectordb_exp_spark.registry import ORACLES  # noqa: E402
+from legalchatbot_vectordb_exp_spark import staging  # noqa: E402
 
 SF_DIR = os.environ.get(
     "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
@@ -57,9 +57,13 @@ def test_graph_structure(spark):
 
 def test_build_is_cached_per_process(spark):
     g1 = knn_graph_build(spark, SF_DIR)
-    assert SF_DIR in _KNN_GRAPH_STAGING
+    assert ("knn_graph", os.path.abspath(SF_DIR)) in [
+        (name, os.path.abspath(sf)) for name, sf, _ in staging.build_log()
+    ]
+    builds = len(staging.build_log())
     g2 = knn_graph_build(spark, SF_DIR)
     assert g1 is g2, "second build must return the staged graph"
+    assert len(staging.build_log()) == builds
 
 
 def test_cached_edges_at_rest_roundtrip(spark, tmp_path, monkeypatch):
@@ -144,10 +148,10 @@ def test_refinement_beats_init(spark):
     final_mean = (
         knn_graph_build(spark, SF_DIR).agg(F.avg("score")).collect()[0][0]
     )
-    old_iters, old_cache = A.KNN_ITERS, dict(A._KNN_GRAPH_STAGING)
+    old_iters = A.KNN_ITERS
     try:
         A.KNN_ITERS = 0
-        A._KNN_GRAPH_STAGING.clear()
+        staging.clear()
         init_mean = (
             knn_graph_build(spark, SF_DIR)
             .agg(F.avg("score"))
@@ -155,8 +159,8 @@ def test_refinement_beats_init(spark):
         )
     finally:
         A.KNN_ITERS = old_iters
-        A._KNN_GRAPH_STAGING.clear()
-        A._KNN_GRAPH_STAGING.update(old_cache)
+        # drop the KNN_ITERS=0 graph (and everything staged on it)
+        staging.clear()
     assert final_mean > init_mean, (
         f"refinement did not improve: init {init_mean} final {final_mean}"
     )

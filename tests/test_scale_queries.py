@@ -317,21 +317,21 @@ def test_dedup_index_cdc_maintain_equals_recompute(spark, sf_smoke):
     produces — no stale row, no double-add, no missed retirement."""
     from legalchatbot_vectordb_exp_spark.queries_roundtrip import (
         _doc_bands,
-        _scratch,
         q_dedup_index_cdc_maintain,
     )
+    from legalchatbot_vectordb_exp_spark.staging import scratch
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
 
     q_dedup_index_cdc_maintain(spark, sf_smoke).collect()  # build
     coll = VersionedCollection(
-        spark, _scratch(sf_smoke, "dedup_idx_cdc"), "docs_idx"
+        spark, scratch(sf_smoke, "dedup_idx_cdc"), "docs_idx"
     )
     final = coll.read().select(F.col("id").alias("doc_id"), "text")
     recompute = sorted(map(tuple, _doc_bands(final).collect()))
 
-    index_v0 = spark.read.parquet(_scratch(sf_smoke, "dedup_idx_bands"))
+    index_v0 = spark.read.parquet(scratch(sf_smoke, "dedup_idx_bands"))
     feed = coll.changes(0, 2)
     retired = feed.filter(
         F.col("_change_type").isin("delete", "update_postimage")

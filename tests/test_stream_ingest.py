@@ -149,3 +149,53 @@ def test_changes_feed_streams_one_commit_per_batch_and_resumes(
     # checkpointed offsets: ONLY the unseen commit is processed
     assert [sorted(vs) for _, vs, _ in batches] == [[3]]
     assert batches[0][2] == [(9, "insert")]
+
+
+def test_changes_feed_span_is_stamped_before_it_becomes_visible(
+    spark, tmp_path, monkeypatch
+):
+    """A staged span must never be observable with its raw write mtime:
+    the temp part already carries ``base_t + tv`` when ``os.replace``
+    publishes it, where ``base_t`` is the call's start time minus an
+    hour."""
+    import os
+    import time
+
+    from legalchatbot_vectordb_exp_spark.sources.versioned import (
+        VersionedCollection,
+    )
+    from legalchatbot_vectordb_exp_spark.streaming.ingest import (
+        stage_changes_feed,
+    )
+
+    coll = VersionedCollection(spark, str(tmp_path / "wh"), "cdf_mtime")
+    coll.create(
+        spark.createDataFrame(
+            [(i, [float(i), 1.0], i) for i in range(6)],
+            "id long, vector array<double>, label long",
+        ),
+        dim=2,
+        metric="dot",
+        normalize=False,
+    )
+    coll.delete_where("id = 1")
+    coll.delete_where("id = 2")
+
+    seen: dict[str, float] = {}
+    real_replace = os.replace
+
+    def replace(src, dst):
+        seen[os.path.basename(dst)] = os.stat(src).st_mtime
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    t0 = time.time()
+    staging = stage_changes_feed(
+        coll, 0, staging_dir=str(tmp_path / "log")
+    )
+    t1 = time.time()
+    assert sorted(seen) == ["v00000001.parquet", "v00000002.parquet"]
+    for name, mtime in seen.items():
+        tv = int(name[1:9])
+        assert t0 - 3600 + tv - 1 <= mtime <= t1 - 3600 + tv + 1, name
+        assert os.stat(os.path.join(staging, name)).st_mtime == mtime

@@ -1,11 +1,12 @@
-"""Dump .explain("formatted") for the named queries to plans/r21/.
+"""Dump .explain("formatted") for the named queries to plans/<round>/.
 
-Usage: python tools_r21/dump_plans.py <suffix> q1 q2 ...
-Writes plans/r21/<query>_<suffix>.txt for each query.
+Usage: python tools/dump_plans.py --round r22 <suffix> q1 q2 ...
+Writes plans/<round>/<query>_<suffix>.txt for each query.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -16,24 +17,27 @@ from legalchatbot_vectordb_exp_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--round", required=True, help="plans/ subdir, e.g. r22")
+    ap.add_argument("suffix")
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r21",
+        args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in names:
+    for name in args.names:
         fn = QUERIES[name]
         df = fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange)")

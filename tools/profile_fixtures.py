@@ -3,7 +3,7 @@
 with setJobDescription and timed so the fixture cost decomposes into
 its actual jobs instead of one opaque number.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools_r20/profile_fixtures.py [sparse|cdf|all]
+Usage: SPARK_GRAFT_SF_DIR=... python tools/profile_fixtures.py [sparse|cdf|all]
 """
 
 from __future__ import annotations
@@ -16,8 +16,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from bench import warm_up  # noqa: E402
 from legalchatbot_vectordb_exp_spark.session import get_spark  # noqa: E402
 from legalchatbot_vectordb_exp_spark.io_tables import load_table  # noqa: E402
+from legalchatbot_vectordb_exp_spark.staging import fresh, scratch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -35,7 +37,6 @@ def phase(spark, label):
 def profile_sparse(spark):
     import shutil
 
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
     from legalchatbot_vectordb_exp_spark.queries_sparse import (
         SPARSE_INCR_BUCKETS,
         SPARSE_INCR_DEL,
@@ -48,10 +49,9 @@ def profile_sparse(spark):
         VectorCollection,
     )
 
-    warehouse = _scratch(SF_DIR, "sparse_incr_profile")
+    warehouse = scratch(SF_DIR, "sparse_incr_profile")
     coll = VectorCollection(spark, warehouse, "doc_postings_profile")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)
+    fresh(coll.path)
     v0 = (
         load_table(spark, SF_DIR, "documents")
         .filter(F.col("doc_id") % 8 == 1)
@@ -94,7 +94,6 @@ def profile_sparse(spark):
 def profile_cdf(spark):
     import shutil
 
-    from legalchatbot_vectordb_exp_spark.queries_roundtrip import _scratch
     from legalchatbot_vectordb_exp_spark.sources.versioned import (
         VersionedCollection,
     )
@@ -103,10 +102,9 @@ def profile_cdf(spark):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    warehouse = _scratch(SF_DIR, "cdf_stream_profile")
+    warehouse = scratch(SF_DIR, "cdf_stream_profile")
     coll = VersionedCollection(spark, warehouse, "emb_cdf_profile")
-    if os.path.isdir(coll.path):
-        shutil.rmtree(coll.path)
+    fresh(coll.path)
     dim = len(emb.select("embedding").head()[0])
 
     def sel(df, bump):
@@ -136,9 +134,7 @@ def profile_cdf(spark):
     phase(spark, "cdf: merge v4 (sentinel)")
     coll.merge(sel(emb.filter(F.col("vec_id") < 5), 9000))
     phase(spark, "cdf: stage_changes_feed")
-    staging = _scratch(SF_DIR, "cdf_stream_log_profile")
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
+    staging = fresh(scratch(SF_DIR, "cdf_stream_log_profile"))
     stage_changes_feed(coll, 0, 4, staging_dir=staging)
     phase(spark, "cdf: done (streaming replay not included)")
     shutil.rmtree(coll.path, ignore_errors=True)
@@ -154,26 +150,7 @@ def main():
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py so phase 1 is not billed JVM init
-    warm = spark.read.parquet(f"{SF_DIR}/region.parquet")
-    warm.count()
-    warm.groupBy("r_regionkey").count().write.mode("overwrite").format(
-        "noop"
-    ).save()
-
-    def _warm_kernel(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        _warm_kernel, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-    spark.createDataFrame([(0, 0)], "a long, b long").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    warm_up(spark, SF_DIR)  # so phase 1 is not billed JVM init
 
     if which in ("sparse", "all"):
         print("== sparse_layout_incremental fixture ==", flush=True)

@@ -1,8 +1,8 @@
 """Isolated per-query micro-bench: fresh process, warmed JVM (same
 warm-up as bench.py), then min-of-N noop-sink timings per named query.
 
-Usage: python tools_r21/qbench.py q1 q2 ...          # steady min-of-3
-       QB_REPEATS=5 python tools_r21/qbench.py q1    # more repeats
+Usage: python tools/qbench.py q1 q2 ...          # steady min-of-3
+       QB_REPEATS=5 python tools/qbench.py q1    # more repeats
 
 Prints per-query: first-run seconds (fixture-inclusive) and steady min.
 """
@@ -16,6 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _calibrate, warm_up  # noqa: E402
 from legalchatbot_vectordb_exp_spark.queries import QUERIES  # noqa: E402
 from legalchatbot_vectordb_exp_spark.session import get_spark  # noqa: E402
 
@@ -30,42 +31,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warm-up as bench.py: scan+codegen, shuffle agg, Python workers
-    warm = spark.read.parquet(f"{sf_dir}/region.parquet")
-    warm.count()
-    warm.groupBy("r_regionkey").count().write.mode("overwrite").format(
-        "noop"
-    ).save()
-
-    def _warm_kernel(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        _warm_kernel, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-    spark.createDataFrame([(0, 0)], "a long, b long").write.mode(
-        "overwrite"
-    ).format("noop").save()
-    # run the calibration kernel a few times to push JIT toward steady
-    import pyspark.sql.functions as F
-
-    for _ in range(3):
-        (
-            spark.range(2_000_000)
-            .select(
-                (F.col("id") * 2654435761 % 1000003).alias("h"),
-                (F.col("id") % 4096).alias("g"),
-            )
-            .groupBy("g")
-            .agg(F.sum("h").alias("s"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
+    # same warm-up as bench.py, then the calibration kernel to steady
+    # state to push the JIT toward steady
+    warm_up(spark, sf_dir)
+    _calibrate(spark)
 
     out = {}
     for name in names:
