@@ -2,7 +2,7 @@
 # end-of-round snapshot.  Two consecutive rounds lost their bench
 # artifact to one broken query — the gate makes the check mechanical.
 #
-#   make gate      # full suite + 151-query oracle census + bench pass
+#   make gate      # full suite + 183-query oracle census + bench pass
 #   make test      # pytest only
 #   make census    # regenerate CORRECTNESS_local_sf001.json (sf0.01)
 #   make bench     # one bench pass at sf0.1 (bench_latest.json)

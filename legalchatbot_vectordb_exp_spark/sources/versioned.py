@@ -2060,14 +2060,289 @@ class VersionedCollection:
             rows.append(d)
         return rows
 
+    # -------------------------------------------------------- commit path
+
+    def _retry(self, max_retries: int, attempt_fn):
+        """The optimistic-commit loop every write shares: each attempt
+        plans against the latest snapshot — ``attempt_fn(attempt,
+        base, manifest, schema)`` writes and publishes — and a
+        ``ConcurrentWriteError`` (a lost publish race the publisher
+        could not rebase) re-plans from the new latest version, up to
+        ``max_retries`` attempts; the last conflict is re-raised."""
+        if max_retries < 1:
+            raise ValueError(f"max_retries must be >= 1, got {max_retries}")
+        last_err: Exception | None = None
+        for attempt in range(max_retries):
+            base = self.latest_version()
+            m = self.manifest(base)
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            try:
+                return attempt_fn(attempt, base, m, schema)
+            except ConcurrentWriteError as exc:
+                last_err = exc
+        raise last_err  # type: ignore[misc]
+
+    def _record_stats(
+        self,
+        attr: str,
+        m: dict,
+        candidates: list[str],
+        pruned: int,
+        rewritten: int,
+        attempt: int,
+        rebases: int,
+    ) -> "VersionedCollection":
+        """Store a winning attempt's file split (total / pruned by
+        manifest stats / scanned / rewritten) and its re-plan and
+        rebase counts as ``self.<attr>`` — the
+        ``last_{merge,delete,update}_stats`` surface."""
+        setattr(
+            self,
+            attr,
+            {
+                "files_total": len(m["files"]),
+                "files_pruned_by_stats": pruned,
+                "files_scanned": len(candidates),
+                "files_rewritten": rewritten,
+                "retries": attempt,
+                "rebases": rebases,
+            },
+        )
+        return self
+
+    def _commit_cow(
+        self,
+        stats_attr: str,
+        attempt: int,
+        base: int,
+        m: dict,
+        candidates: list[str],
+        pruned: int,
+        matched_files: set[str],
+        src: DataFrame | _LocalRows | None,
+        out_schema: StructType,
+        operation: str,
+        key_bounds,
+    ) -> "VersionedCollection":
+        """Copy-on-write tail: write ``src`` (the rewritten survivors
+        plus any inserted rows; ``None`` commits a no-op version) as
+        the payload of ``base + 1``, publish it replacing
+        ``matched_files`` through :meth:`_publish_merge` (rebase on a
+        disjoint race, sweep and raise on a real conflict) and record
+        the stats."""
+        payload = self._write_payload(
+            src,
+            base + 1,
+            self.properties["id_col"],
+            stat_cols=_manifest_stat_cols(m),
+            mapping=self._commit_mapping(m, out_schema)[0] or None,
+        )
+        _v, rebases = self._publish_merge(
+            payload,
+            base,
+            m,
+            matched_files,
+            out_schema,
+            operation,
+            key_bounds,
+        )
+        return self._record_stats(
+            stats_attr,
+            m,
+            candidates,
+            pruned,
+            len(matched_files),
+            attempt,
+            rebases,
+        )
+
+    def _commit_mor(
+        self,
+        stats_attr: str,
+        attempt: int,
+        base: int,
+        m: dict,
+        schema: StructType,
+        candidates: list[str],
+        pruned: int,
+        match,
+        append,
+        operation: str,
+        key_bounds,
+        expected_ndv: int | None = None,
+    ) -> "VersionedCollection":
+        """Merge-on-read tail.  Writes the deletion-vector sidecar —
+        the ``(file, id)`` pairs of the candidate rows that
+        ``match(frame)`` keeps, after the outstanding DVs are applied
+        — then the appended payload ``append(covered, dv_rels)``
+        (``None`` appends nothing), publishes both through
+        :meth:`_publish_mor`, records the stats and runs the DV budget
+        check.  A sidecar that covers nothing is dropped before
+        publish (the commit is then a no-op version), and the sidecar
+        is swept on ANY failure before the publish lands."""
+        id_col = self.properties["id_col"]
+        out: str | None = None
+        dv_rels: list[str] = []
+        covered: list[str] = []
+        try:
+            if candidates:
+                # tag the file BEFORE the DV anti-join:
+                # input_file_name() must bind while the plan has one
+                # file source (Spark's PreReadCheck rejects it above a
+                # join of two scans), and the matched select reuses
+                # the same tag
+                cand = self._read_files(
+                    candidates, m, schema
+                ).withColumn(_DV_FILE_COL, _rel_file_col())
+                dvdf = self._dv_frame(m, schema)
+                if dvdf is not None:
+                    cand = cand.join(
+                        F.broadcast(dvdf),
+                        [_DV_FILE_COL, id_col],
+                        "left_anti",
+                    )
+                sub = os.path.join(
+                    _DATA_DIR,
+                    f"c{base + 1:08d}-dv-{uuid.uuid4().hex[:8]}",
+                )
+                out = os.path.join(self.path, sub)
+                # one narrow job: only (file-path metadata, id) ever
+                # shuffles/writes — the vector payload is pruned at
+                # the scan
+                match(cand).select(
+                    F.col(_DV_FILE_COL), F.col(id_col)
+                ).coalesce(1).write.mode("error").parquet(out)
+                self.io_counters["dv_writes"] = (
+                    self.io_counters.get("dv_writes", 0) + 1
+                )
+                dv_rels = sorted(
+                    os.path.join(sub, f)
+                    for f in os.listdir(out)
+                    if f.endswith(".parquet")
+                    and not f.startswith(("_", "."))
+                )
+                if dv_rels:
+                    covered = self._dv_covered_files(dv_rels)
+                if not covered:
+                    shutil.rmtree(out, ignore_errors=True)
+                    out, dv_rels = None, []
+            payload = self._write_payload(
+                append(covered, dv_rels),
+                base + 1,
+                id_col,
+                stat_cols=_manifest_stat_cols(m),
+                mapping=self._commit_mapping(m, schema)[0] or None,
+                expected_ndv=expected_ndv,
+            )
+            _v, rebases = self._publish_mor(
+                payload, base, m, covered, dv_rels, operation, key_bounds
+            )
+        except Exception:
+            if out is not None:
+                shutil.rmtree(out, ignore_errors=True)
+            raise
+        self._record_stats(
+            stats_attr, m, candidates, pruned, 0, attempt, rebases
+        )
+        self._dv_budget_check()
+        return self
+
+    def _files_matching(
+        self, candidates: list[str], m: dict, schema: StructType, pred
+    ) -> set[str]:
+        """The candidate files holding a row where ``pred`` is true:
+        the predicate itself drives discovery — one scan tags hit rows
+        with their file, no key set is materialized or shuffled."""
+        if not candidates:
+            return set()
+        hit = (
+            self._read_files(candidates, m, schema)
+            .filter(pred)
+            .withColumn("_vc_file", F.input_file_name())
+            .select("_vc_file")
+            .distinct()
+            .collect()
+        )
+        return {self._rel_of_uri(r[0]) for r in hit}
+
+    def _prepare_upsert(self, source: DataFrame) -> tuple:
+        """Validate an upsert batch once, before the retry loop, and
+        return ``(incoming, small, key_list, n_keys, key_bounds)``.
+        CHECK constraints ride the first job that touches the source;
+        columns the source lacks (a ``schema_evolution`` merge) are
+        substituted as typed NULLs — the value actually written — so
+        null-sensitive constraints enforce.  Small batches (the
+        typical CDC merge): ONE scan-only job collects the batch
+        (``small``, bounded by ``_ISIN_PUSHDOWN_LIMIT``) and
+        validation, key list, bounds and count all come from it in
+        Python.  Large batches: validation (same contract as
+        :func:`_validate`) is FOLDED with the key bounds/count into ONE
+        distributed aggregation — the source is scanned once instead
+        of once for validation plus once for bounds.  ``incoming`` is
+        the source re-normalized on a normalized cosine table."""
+        props = self.properties
+        id_col, vector_col = props["id_col"], props["vector_col"]
+        dim = props["dim"]
+        if self.constraints:
+            source = self._guard_source(
+                source,
+                id_col,
+                StructType.fromJson(
+                    json.loads(
+                        self.manifest(self.latest_version())["schema"]
+                    )
+                ),
+            )
+        key_list: list | None = None
+        small = _collect_if_small(source, _ISIN_PUSHDOWN_LIMIT)
+        if small is not None:
+            _validate_rows(small, dim, vector_col, id_col, self.name)
+            key_list = [r[id_col] for r in small]
+            n_keys = len(key_list)
+            key_bounds = (
+                (min(key_list), max(key_list))
+                if key_list
+                else (None, None)
+            )
+        else:
+            row = source.agg(
+                F.sum(
+                    (
+                        F.col(vector_col).isNull()
+                        | (F.size(vector_col) != dim)
+                    ).cast("int")
+                ).alias("bad"),
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct(F.col(id_col)).alias("n_keys"),
+                F.min(id_col).alias("lo"),
+                F.max(id_col).alias("hi"),
+            ).first()
+            bad = row["bad"] or 0
+            dupes = (row["n"] or 0) - (row["n_keys"] or 0)
+            if bad:
+                raise ValueError(
+                    f"collection {self.name}: {bad} rows violate "
+                    f"dim={dim}"
+                )
+            if dupes:
+                raise ValueError(
+                    f"collection {self.name}: {dupes} duplicate ids"
+                )
+            key_bounds = (row["lo"], row["hi"])
+            n_keys = row["n_keys"] or 0
+        incoming = source
+        if props["metric"] == "cosine" and props.get("normalize", True):
+            incoming = incoming.withColumn(
+                vector_col, l2_normalize(vector_col)
+            )
+        return incoming, small, key_list, n_keys, key_bounds
+
     def merge(
         self,
         source: DataFrame,
         when_matched: str = "update",
         max_retries: int = 3,
         schema_evolution: bool = False,
-        broadcast_keys: bool | None = None,
-        assume_unique_keys: bool = False,
     ) -> "VersionedCollection":
         """File-level copy-on-write MERGE keyed on the collection id:
 
@@ -2106,114 +2381,34 @@ class VersionedCollection:
         Without the flag, a source column set that differs from the
         table schema is an error — evolution is always explicit.
 
-        ``broadcast_keys`` controls the join strategy for the
-        discovery semi-join and survivor anti-join: ``True`` forces a
-        broadcast of the distinct merge keys (right for typical CDC
-        batches), ``False`` forces a shuffle join (right for huge
-        backfills whose key set exceeds executor memory), ``None``
-        (default) broadcasts unless the key count — measured by the
+        The discovery semi-join and survivor anti-join broadcast the
+        distinct merge keys unless the key count — measured by the
         same aggregation that computes the pruning bounds — exceeds
-        ``_BROADCAST_KEY_LIMIT``.
-
-        ``assume_unique_keys=True`` (delete mode) lets a caller that
-        already guarantees a distinct key set (``delete_where`` —
-        table ids are unique by write invariant) skip the dedup
-        shuffle.
+        ``_BROADCAST_KEY_LIMIT``; past it (huge backfills whose key
+        set exceeds executor memory) they shuffle.
 
         Driver-side collects here are all BOUNDED by
         ``_ISIN_PUSHDOWN_LIMIT`` (1024): batches at most that big are
         collected once (one scan-only job) and validated / bounded /
         IN-listed in Python; anything larger goes through the
         distributed aggregation + semi/anti-join path."""
-        if max_retries < 1:
-            raise ValueError(f"max_retries must be >= 1, got {max_retries}")
         if when_matched not in ("update", "delete"):
             raise ValueError(f"unknown when_matched={when_matched!r}")
         props = self.properties
-        id_col, vector_col = props["id_col"], props["vector_col"]
+        id_col = props["id_col"]
+        small: list | None = None
         key_bounds: tuple | None = None  # computed once, on first need
         n_keys: int | None = None
         key_list: list | None = None  # collected once when small
         if when_matched == "update":
-            # Small batches (the typical CDC merge): ONE scan-only job
-            # collects the batch (bounded by _ISIN_PUSHDOWN_LIMIT) and
-            # validation, key list, bounds and count all come from it
-            # in Python.  Large batches: validation (same contract as
-            # _validate) FOLDED with the merge-key bounds/count into
-            # ONE distributed aggregation — the source is scanned once
-            # instead of once for validation plus once for bounds.
-            dim = props["dim"]
-            if self.constraints:
-                # CHECK constraints ride the first job that touches
-                # the source (the small-batch collect or the
-                # validation aggregation) — no extra scan.  Columns
-                # the source lacks (a schema_evolution merge) are
-                # substituted as typed NULLs — the value actually
-                # written — so null-sensitive constraints enforce.
-                source = self._guard_source(
-                    source,
-                    id_col,
-                    StructType.fromJson(
-                        json.loads(
-                            self.manifest(self.latest_version())[
-                                "schema"
-                            ]
-                        )
-                    ),
-                )
-            small = _collect_if_small(source, _ISIN_PUSHDOWN_LIMIT)
-            if small is not None:
-                _validate_rows(small, dim, vector_col, id_col, self.name)
-                key_list = [r[id_col] for r in small]
-                n_keys = len(key_list)
-                key_bounds = (
-                    (min(key_list), max(key_list))
-                    if key_list
-                    else (None, None)
-                )
-            else:
-                row = source.agg(
-                    F.sum(
-                        (
-                            F.col(vector_col).isNull()
-                            | (F.size(vector_col) != dim)
-                        ).cast("int")
-                    ).alias("bad"),
-                    F.count(F.lit(1)).alias("n"),
-                    F.countDistinct(F.col(id_col)).alias("n_keys"),
-                    F.min(id_col).alias("lo"),
-                    F.max(id_col).alias("hi"),
-                ).first()
-                bad = row["bad"] or 0
-                dupes = (row["n"] or 0) - (row["n_keys"] or 0)
-                if bad:
-                    raise ValueError(
-                        f"collection {self.name}: {bad} rows violate "
-                        f"dim={dim}"
-                    )
-                if dupes:
-                    raise ValueError(
-                        f"collection {self.name}: {dupes} duplicate ids"
-                    )
-                key_bounds = (row["lo"], row["hi"])
-                n_keys = row["n_keys"]
-            incoming = source
-            if props["metric"] == "cosine" and props.get("normalize", True):
-                incoming = incoming.withColumn(
-                    vector_col, l2_normalize(vector_col)
-                )
+            incoming, small, key_list, n_keys, key_bounds = (
+                self._prepare_upsert(source)
+            )
             # ids are proven unique above — no distinct shuffle
             keys = incoming.select(id_col)
         else:
             incoming = source
-            # assume_unique_keys (delete mode): the caller vouches the
-            # key set is already distinct (delete_where passes table
-            # rows, unique by invariant) — skips a shuffle
-            keys = (
-                incoming.select(id_col)
-                if assume_unique_keys
-                else incoming.select(id_col).distinct()
-            )
+            keys = incoming.select(id_col).distinct()
             head = _collect_if_small(keys, _ISIN_PUSHDOWN_LIMIT)
             if head is not None:
                 key_list = [r[0] for r in head]
@@ -2221,11 +2416,8 @@ class VersionedCollection:
                 nn = [k for k in key_list if k is not None]
                 key_bounds = (min(nn), max(nn)) if nn else (None, None)
 
-        last_err: Exception | None = None
-        for attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+        def attempt_fn(attempt, base, m, schema):
+            nonlocal key_bounds, n_keys, key_list
             stats = m.get("stats", {})
             if schema_evolution and when_matched == "update":
                 new_fields = [
@@ -2283,10 +2475,7 @@ class VersionedCollection:
                 key_bounds = (kb["lo"], kb["hi"])
                 n_keys = kb["n"]
             key_lo, key_hi = key_bounds or (None, None)
-            if broadcast_keys is None:
-                use_bcast = n_keys is None or n_keys <= _BROADCAST_KEY_LIMIT
-            else:
-                use_bcast = broadcast_keys
+            use_bcast = n_keys is None or n_keys <= _BROADCAST_KEY_LIMIT
             kdf = F.broadcast(keys) if use_bcast else keys
             candidates = []
             pruned = 0
@@ -2309,7 +2498,6 @@ class VersionedCollection:
             # new files written driver-side.  Never fires at
             # production file sizes; preserves last_merge_stats
             # semantics exactly.
-            local_rows: _LocalRows | None = None
             can_fuse = (
                 key_list is not None
                 and len(candidates) <= _LOCAL_REWRITE_MAX_FILES
@@ -2344,154 +2532,106 @@ class VersionedCollection:
                     for d in crows
                     if _k(d[id_col]) in keyset
                 }
-                survivors_rows = [
-                    d
-                    for d in crows
-                    if d["_vc_rel"] in matched_files
-                    and _k(d[id_col]) not in keyset
-                ]
                 out_names = out_schema.fieldNames()
                 out_rows = [
                     {n: d.get(n) for n in out_names}
-                    for d in survivors_rows
+                    for d in crows
+                    if d["_vc_rel"] in matched_files
+                    and _k(d[id_col]) not in keyset
                 ]
                 if when_matched == "update":
                     out_rows += [
                         {n: d.get(n) for n in out_names}
                         for d in (r.asDict() for r in small)
                     ]
-                local_rows = _LocalRows(
+                out = _LocalRows(
                     _split_chunks(out_rows, max(1, len(matched_files))),
                     out_schema,
                 )
-                payload = self._write_payload(
-                    local_rows,
-                    base + 1,
-                    id_col,
-                    stat_cols=_manifest_stat_cols(m),
-                    mapping=self._commit_mapping(m, out_schema)[0]
-                    or None,
-                )
-                try:
-                    _v, rebases = self._publish_merge(
-                        payload,
-                        base,
-                        m,
-                        matched_files,
-                        out_schema,
-                        f"merge:{when_matched}",
-                        key_bounds,
-                    )
-                    self.last_merge_stats = {
-                        "files_total": len(m["files"]),
-                        "files_pruned_by_stats": pruned,
-                        "files_scanned": len(candidates),
-                        "files_rewritten": len(matched_files),
-                        "retries": attempt,
-                        "rebases": rebases,
+            else:
+                # tier 2 — id column + file name only on the candidates
+                # (parquet prunes every other column).  Small key sets
+                # push an IN() literal filter instead of the semi-join:
+                # the predicate reaches the parquet reader, which then
+                # skips row groups by column stats AND the write-time
+                # bloom filter — effective even on hash layouts where
+                # manifest min/max ranges overlap every file.
+                matched_files = set()
+                if candidates:
+                    if (
+                        key_list is None
+                        and n_keys
+                        and n_keys <= _ISIN_PUSHDOWN_LIMIT
+                    ):
+                        key_list = [r[0] for r in keys.collect()]
+                    cand = self._read_files(candidates, m, schema)
+                    if key_list is not None:
+                        probe = cand.filter(
+                            F.col(id_col).isin(key_list)
+                        ).withColumn("_vc_file", F.input_file_name())
+                        # ids unique + key list bounded → at most
+                        # len(key_list) ≤ 1024 hit rows: dedup the file
+                        # names in Python instead of a distinct shuffle
+                        hit_rows = probe.select("_vc_file").collect()
+                    else:
+                        probe = cand.withColumn(
+                            "_vc_file", F.input_file_name()
+                        ).join(kdf, id_col, "semi")
+                        hit_rows = (
+                            probe.select("_vc_file").distinct().collect()
+                        )
+                    matched_files = {
+                        self._rel_of_uri(r[0]) for r in hit_rows
                     }
-                    return self
-                except ConcurrentWriteError as exc:
-                    last_err = exc
-                    continue
-
-            # tier 2 — id column + file name only on the candidates
-            # (parquet prunes every other column).  Small key sets
-            # push an IN() literal filter instead of the semi-join:
-            # the predicate reaches the parquet reader, which then
-            # skips row groups by column stats AND the write-time
-            # bloom filter — effective even on hash layouts where
-            # manifest min/max ranges overlap every file.
-            matched_files: set[str] = set()
-            if candidates:
-                if (
-                    key_list is None
-                    and n_keys
-                    and n_keys <= _ISIN_PUSHDOWN_LIMIT
-                ):
-                    key_list = [r[0] for r in keys.collect()]
-                cand = self._read_files(candidates, m, schema)
-                if key_list is not None:
-                    probe = cand.filter(
-                        F.col(id_col).isin(key_list)
-                    ).withColumn("_vc_file", F.input_file_name())
-                    # ids unique + key list bounded → at most
-                    # len(key_list) ≤ 1024 hit rows: dedup the file
-                    # names in Python instead of a distinct shuffle
-                    hit_rows = probe.select("_vc_file").collect()
-                else:
-                    probe = cand.withColumn(
-                        "_vc_file", F.input_file_name()
-                    ).join(kdf, id_col, "semi")
-                    hit_rows = (
-                        probe.select("_vc_file").distinct().collect()
+                if matched_files:
+                    rewr = self._apply_dv(
+                        self._read_files(sorted(matched_files), m, schema),
+                        m,
+                        schema,
                     )
-                matched_files = {
-                    self._rel_of_uri(r[0]) for r in hit_rows
-                }
-            if matched_files:
-                rewr = self._apply_dv(
-                    self._read_files(sorted(matched_files), m, schema),
-                    m,
-                    schema,
-                )
-                # small key sets: a literal NOT IN survives as a scan-
-                # stage filter (no broadcast build job, no join);
-                # large: anti-join against the key frame
-                if key_list is not None:
-                    survivors = rewr.filter(
-                        ~F.col(id_col).isin(key_list)
-                    )
+                    # small key sets: a literal NOT IN survives as a
+                    # scan-stage filter (no broadcast build job, no
+                    # join); large: anti-join against the key frame
+                    if key_list is not None:
+                        survivors = rewr.filter(
+                            ~F.col(id_col).isin(key_list)
+                        )
+                    else:
+                        survivors = rewr.join(kdf, id_col, "left_anti")
                 else:
-                    survivors = rewr.join(kdf, id_col, "left_anti")
-            else:
-                survivors = self.spark.createDataFrame([], schema)
-            if when_matched == "update":
-                if schema_evolution:
-                    out = survivors.unionByName(
-                        incoming, allowMissingColumns=True
-                    ).select(*out_schema.fieldNames())
+                    survivors = self.spark.createDataFrame([], schema)
+                if when_matched == "update":
+                    if schema_evolution:
+                        out = survivors.unionByName(
+                            incoming, allowMissingColumns=True
+                        ).select(*out_schema.fieldNames())
+                    else:
+                        out = survivors.unionByName(
+                            incoming.select(*schema.fieldNames())
+                        )
                 else:
-                    out = survivors.unionByName(
-                        incoming.select(*schema.fieldNames())
-                    )
-            else:
-                out = survivors
-            # bound output file count to the rewritten-input count:
-            # without this, survivors' partitions + incoming's
-            # partitions each emit a file and every merge multiplies
-            # small files (measured: 8 rewritten -> 18 written)
-            out = out.coalesce(max(1, len(matched_files)))
-
-            payload = self._write_payload(
+                    out = survivors
+                # bound output file count to the rewritten-input count:
+                # without this, survivors' partitions + incoming's
+                # partitions each emit a file and every merge
+                # multiplies small files (measured: 8 rewritten -> 18
+                # written)
+                out = out.coalesce(max(1, len(matched_files)))
+            return self._commit_cow(
+                "last_merge_stats",
+                attempt,
+                base,
+                m,
+                candidates,
+                pruned,
+                matched_files,
                 out,
-                base + 1,
-                id_col,
-                stat_cols=_manifest_stat_cols(m),
-                mapping=self._commit_mapping(m, out_schema)[0] or None,
+                out_schema,
+                f"merge:{when_matched}",
+                key_bounds,
             )
-            try:
-                _v, rebases = self._publish_merge(
-                    payload,
-                    base,
-                    m,
-                    matched_files,
-                    out_schema,
-                    f"merge:{when_matched}",
-                    key_bounds,
-                )
-                self.last_merge_stats = {
-                    "files_total": len(m["files"]),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": len(matched_files),
-                    "retries": attempt,
-                    "rebases": rebases,
-                }
-                return self
-            except ConcurrentWriteError as exc:
-                last_err = exc  # conflicting window: re-plan on winner
-        raise last_err  # type: ignore[misc]
+
+        return self._retry(max_retries, attempt_fn)
 
     def merge_mor(
         self,
@@ -2519,73 +2659,28 @@ class VersionedCollection:
         exactly (use the COW merge for evolving batches).  Meant for
         micro-batch-sized CDC upserts: the append is coalesced to one
         file per commit."""
-        if max_retries < 1:
-            raise ValueError(f"max_retries must be >= 1, got {max_retries}")
-        props = self.properties
-        id_col, vector_col = props["id_col"], props["vector_col"]
-        dim = props["dim"]
-        if self.constraints:
-            source = self._guard_source(
-                source,
-                id_col,
-                StructType.fromJson(
-                    json.loads(
-                        self.manifest(self.latest_version())["schema"]
-                    )
-                ),
-            )
-        key_list: list | None = None
-        small = _collect_if_small(source, _ISIN_PUSHDOWN_LIMIT)
-        if small is not None:
-            _validate_rows(small, dim, vector_col, id_col, self.name)
-            key_list = [r[id_col] for r in small]
-            n_keys = len(key_list)
-            key_bounds = (
-                (min(key_list), max(key_list))
-                if key_list
-                else (None, None)
-            )
-        else:
-            row = source.agg(
-                F.sum(
-                    (
-                        F.col(vector_col).isNull()
-                        | (F.size(vector_col) != dim)
-                    ).cast("int")
-                ).alias("bad"),
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct(F.col(id_col)).alias("n_keys"),
-                F.min(id_col).alias("lo"),
-                F.max(id_col).alias("hi"),
-            ).first()
-            if row["bad"]:
-                raise ValueError(
-                    f"collection {self.name}: {row['bad']} rows "
-                    f"violate dim={dim}"
-                )
-            if (row["n"] or 0) - (row["n_keys"] or 0):
-                raise ValueError(
-                    f"collection {self.name}: "
-                    f"{(row['n'] or 0) - (row['n_keys'] or 0)} "
-                    f"duplicate ids"
-                )
-            key_bounds = (row["lo"], row["hi"])
-            n_keys = row["n_keys"] or 0
-        # both branches above set an exact count; the empty-batch
+        id_col = self.properties["id_col"]
+        incoming, _small, key_list, n_keys, key_bounds = (
+            self._prepare_upsert(source)
+        )
+        # the upsert preparation sets an exact count; the empty-batch
         # short-circuit below keys on == 0 and must NEVER see an
         # unknown size (an unknown batch no-op'd instead of merging
         # would be a silent data loss)
         assert n_keys is not None
-        incoming = source
-        if props["metric"] == "cosine" and props.get("normalize", True):
-            incoming = incoming.withColumn(
-                vector_col, l2_normalize(vector_col)
+
+        def match(cand):
+            if key_list is not None:
+                return cand.filter(F.col(id_col).isin(key_list))
+            return cand.join(
+                F.broadcast(incoming.select(id_col))
+                if n_keys <= _BROADCAST_KEY_LIMIT
+                else incoming.select(id_col),
+                id_col,
+                "semi",
             )
-        last_err: Exception | None = None
-        for _attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+
+        def attempt_fn(attempt, base, m, schema):
             extra = set(incoming.columns) - set(schema.fieldNames())
             if extra:
                 raise ValueError(
@@ -2594,7 +2689,6 @@ class VersionedCollection:
                     f"{sorted(extra)}; schema evolution needs the "
                     f"copy-on-write merge()"
                 )
-            files = m["files"]
             if n_keys == 0:
                 # EMPTY batch: writing the zero-row parquet would add
                 # a stats-less file to the manifest, and stats-less
@@ -2603,103 +2697,28 @@ class VersionedCollection:
                 # a compaction folds the file away.  Publish a
                 # carried-only no-op commit instead (history parity
                 # with the nothing-matched DELETE path).
-                candidates, pruned = [], 0
+                candidates, pruned, out = [], 0, None
             else:
                 candidates, pruned = _stats_candidates(
-                    files, m.get("stats", {}), key_bounds
+                    m["files"], m.get("stats", {}), key_bounds
                 )
-            dv_rels: list[str] = []
-            covered: list[str] = []
-            out: str | None = None
-            if candidates:
-                cand = self._read_files(
-                    candidates, m, schema
-                ).withColumn(_DV_FILE_COL, _rel_file_col())
-                dvdf = self._dv_frame(m, schema)
-                if dvdf is not None:
-                    cand = cand.join(
-                        F.broadcast(dvdf),
-                        [_DV_FILE_COL, id_col],
-                        "left_anti",
-                    )
-                if key_list is not None:
-                    matched = cand.filter(
-                        F.col(id_col).isin(key_list)
-                    )
-                else:
-                    matched = cand.join(
-                        F.broadcast(incoming.select(id_col))
-                        if n_keys <= _BROADCAST_KEY_LIMIT
-                        else incoming.select(id_col),
-                        id_col,
-                        "semi",
-                    )
-                matched = matched.select(
-                    F.col(_DV_FILE_COL), F.col(id_col)
-                )
-                sub = os.path.join(
-                    _DATA_DIR,
-                    f"c{base + 1:08d}-dv-{uuid.uuid4().hex[:8]}",
-                )
-                out = os.path.join(self.path, sub)
-                matched.coalesce(1).write.mode("error").parquet(out)
-                self.io_counters["dv_writes"] = (
-                    self.io_counters.get("dv_writes", 0) + 1
-                )
-                dv_rels = sorted(
-                    os.path.join(sub, f)
-                    for f in os.listdir(out)
-                    if f.endswith(".parquet")
-                    and not f.startswith(("_", "."))
-                )
-                if dv_rels:
-                    covered = self._dv_covered_files(dv_rels)
-            if not covered and out is not None:
-                shutil.rmtree(out, ignore_errors=True)
-            try:
-                payload = (
-                    (None, [], {}, {})
-                    if n_keys == 0
-                    else self._write_payload(
-                        incoming.select(
-                            *schema.fieldNames()
-                        ).coalesce(1),
-                        base + 1,
-                        id_col,
-                        stat_cols=_manifest_stat_cols(m),
-                        mapping=self._commit_mapping(m, schema)[0]
-                        or None,
-                        expected_ndv=n_keys,
-                    )
-                )
-                _v, rebases = self._publish_mor(
-                    payload,
-                    base,
-                    m,
-                    covered,
-                    dv_rels if covered else [],
-                    "merge:mor",
-                    key_bounds,
-                )
-                self.last_merge_stats = {
-                    "files_total": len(files),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": 0,
-                    "retries": _attempt,
-                    "rebases": rebases,
-                }
-                self._dv_budget_check()
-                return self
-            except ConcurrentWriteError as exc:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                last_err = exc
-            except Exception:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                raise
-        raise last_err  # type: ignore[misc]
+                out = incoming.select(*schema.fieldNames()).coalesce(1)
+            return self._commit_mor(
+                "last_merge_stats",
+                attempt,
+                base,
+                m,
+                schema,
+                candidates,
+                pruned,
+                match,
+                lambda _covered, _dv_rels: out,
+                "merge:mor",
+                key_bounds,
+                expected_ndv=n_keys,
+            )
+
+        return self._retry(max_retries, attempt_fn)
 
     def delete_where(
         self, predicate, max_retries: int = 3, mode: str = "cow"
@@ -2723,7 +2742,11 @@ class VersionedCollection:
           is one narrow column scan plus a KB write.  Readers apply
           the DV as a broadcast *(file, id)* anti-join until a later
           rewrite (merge / compact / recluster) of the covered file
-          materializes it away.
+          materializes it away.  The matching scan applies existing
+          DVs first, so re-deleting an already-dead row is a no-op
+          (DV pair sets stay disjoint); all files carry, and parent DV
+          covers stay valid verbatim because no file leaves the
+          snapshot.
 
         When the predicate (given as a SQL string) provably bounds the
         id column (``"id >= 3 AND id < 9"``, ``"id IN (2, 7)"``), the
@@ -2742,19 +2765,27 @@ class VersionedCollection:
         # via col_stats (round-15 verdict item 4)
         bmap = _predicate_col_bounds(predicate)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if mode == "mor":
-            return self._delete_where_mor(pred, max_retries, bmap)
-        last_err: Exception | None = None
-        for attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            stats = m.get("stats", {})
-            files = m["files"]
-            candidates, pruned = _stats_candidates_multi(
-                files, stats, m.get("col_stats", {}), bmap, id_col
-            )
+        hit = F.coalesce(pred, F.lit(False))
 
+        def attempt_fn(attempt, base, m, schema):
+            candidates, pruned = _stats_candidates_multi(
+                m["files"], m.get("stats", {}), m.get("col_stats", {}),
+                bmap, id_col,
+            )
+            if mode == "mor":
+                return self._commit_mor(
+                    "last_delete_stats",
+                    attempt,
+                    base,
+                    m,
+                    schema,
+                    candidates,
+                    pruned,
+                    lambda cand: cand.filter(hit),
+                    lambda _covered, _dv_rels: None,
+                    "delete_where:mor",
+                    bmap,
+                )
             # Fused local path — tiny tables: ONE collect evaluates
             # the predicate (still Spark SQL — arbitrary expressions)
             # and tags each row with its file; matched files,
@@ -2769,19 +2800,17 @@ class VersionedCollection:
             )
             if can_fuse:
                 can_fuse = self._fits_local_rewrite(candidates)
+            # nothing to delete — still commit a no-op version so the
+            # operation is visible in history (Delta parity)
+            survivors = None
             if can_fuse:
                 crows = self._collect_tagged(
-                    candidates,
-                    schema,
-                    extra={"_vc_hit": F.coalesce(pred, F.lit(False))},
-                    m=m,
+                    candidates, schema, extra={"_vc_hit": hit}, m=m
                 )
                 matched_files = {
                     d["_vc_rel"] for d in crows if d["_vc_hit"]
                 }
-                if not matched_files:
-                    survivors = None
-                else:
+                if matched_files:
                     names = schema.fieldNames()
                     out_rows = [
                         {n: d.get(n) for n in names}
@@ -2790,194 +2819,40 @@ class VersionedCollection:
                         and not d["_vc_hit"]
                     ]
                     survivors = _LocalRows(
-                        _split_chunks(
-                            out_rows, max(1, len(matched_files))
-                        ),
+                        _split_chunks(out_rows, len(matched_files)),
                         schema,
                     )
-                payload = self._write_payload(
-                    survivors,
-                    base + 1,
-                    id_col,
-                    stat_cols=_manifest_stat_cols(m),
-                    mapping=self._commit_mapping(m, schema)[0] or None,
-                )
-                try:
-                    _v, rebases = self._publish_merge(
-                        payload,
-                        base,
-                        m,
-                        matched_files,
-                        schema,
-                        "delete_where",
-                        bmap,
-                    )
-                    self.last_delete_stats = {
-                        "files_total": len(files),
-                        "files_pruned_by_stats": pruned,
-                        "files_scanned": len(candidates),
-                        "files_rewritten": len(matched_files),
-                        "retries": attempt,
-                        "rebases": rebases,
-                    }
-                    return self
-                except ConcurrentWriteError as exc:
-                    last_err = exc
-                    continue
-
-            matched_files: set[str] = set()
-            if candidates:
-                cand = self._read_files(candidates, m, schema)
-                hit = (
-                    cand.filter(pred)
-                    .withColumn("_vc_file", F.input_file_name())
-                    .select("_vc_file")
-                    .distinct()
-                    .collect()
-                )
-                matched_files = {self._rel_of_uri(r[0]) for r in hit}
-            if not matched_files:
-                # nothing to delete — still commit a no-op version so
-                # the operation is visible in history (Delta parity)
-                survivors = None
             else:
-                survivors = (
-                    self._apply_dv(
-                        self._read_files(
-                            sorted(matched_files), m, schema
-                        ),
-                        m,
-                        schema,
-                    )
-                    .filter(~F.coalesce(pred, F.lit(False)))
-                    .coalesce(max(1, len(matched_files)))
+                matched_files = self._files_matching(
+                    candidates, m, schema, pred
                 )
-            payload = self._write_payload(
+                if matched_files:
+                    survivors = (
+                        self._apply_dv(
+                            self._read_files(
+                                sorted(matched_files), m, schema
+                            ),
+                            m,
+                            schema,
+                        )
+                        .filter(~hit)
+                        .coalesce(len(matched_files))
+                    )
+            return self._commit_cow(
+                "last_delete_stats",
+                attempt,
+                base,
+                m,
+                candidates,
+                pruned,
+                matched_files,
                 survivors,
-                base + 1,
-                id_col,
-                stat_cols=_manifest_stat_cols(m),
-                mapping=self._commit_mapping(m, schema)[0] or None,
+                schema,
+                "delete_where",
+                bmap,
             )
-            try:
-                _v, rebases = self._publish_merge(
-                    payload,
-                    base,
-                    m,
-                    matched_files,
-                    schema,
-                    "delete_where",
-                    bmap,
-                )
-                self.last_delete_stats = {
-                    "files_total": len(files),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": len(matched_files),
-                    "retries": attempt,
-                    "rebases": rebases,
-                }
-                return self
-            except ConcurrentWriteError as exc:
-                last_err = exc
-        raise last_err  # type: ignore[misc]
 
-    def _delete_where_mor(
-        self, pred, max_retries: int, bmap: dict | None = None
-    ) -> "VersionedCollection":
-        """Merge-on-read DELETE: write the matched ``(file, id)``
-        pairs as a deletion-vector parquet and commit ONLY the
-        manifest's ``dv`` entry — zero data rewrite, commit bytes ∝
-        deleted rows.  The matching scan applies existing DVs first,
-        so re-deleting an already-dead row is a no-op (DV pair sets
-        stay disjoint).  All files carry; parent DV covers stay valid
-        verbatim because no file leaves the snapshot.  Predicate-
-        implied per-column bounds (``bmap``) prune the matching scan
-        to stats-intersecting files, and a lost publish race rebases the
-        sidecar onto the winner (:meth:`_publish_mor`) instead of
-        re-scanning."""
-        id_col = self.properties["id_col"]
-        last_err: Exception | None = None
-        for _attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            files = m["files"]
-            candidates, pruned = _stats_candidates_multi(
-                files, m.get("stats", {}), m.get("col_stats", {}),
-                bmap or {}, id_col,
-            )
-            dv_rels: list[str] = []
-            covered: list[str] = []
-            out: str | None = None
-            if candidates:
-                # tag the file BEFORE the DV anti-join:
-                # input_file_name() must bind while the plan has one
-                # file source (Spark's PreReadCheck rejects it above a
-                # join of two scans), and the matched select reuses
-                # the same tag
-                cand = self._read_files(
-                    candidates, m, schema
-                ).withColumn(_DV_FILE_COL, _rel_file_col())
-                dvdf = self._dv_frame(m, schema)
-                if dvdf is not None:
-                    cand = cand.join(
-                        F.broadcast(dvdf),
-                        [_DV_FILE_COL, id_col],
-                        "left_anti",
-                    )
-                matched = cand.filter(
-                    F.coalesce(pred, F.lit(False))
-                ).select(F.col(_DV_FILE_COL), F.col(id_col))
-                sub = os.path.join(
-                    _DATA_DIR,
-                    f"c{base + 1:08d}-dv-{uuid.uuid4().hex[:8]}",
-                )
-                out = os.path.join(self.path, sub)
-                # one narrow job: only (file-path metadata, id) ever
-                # shuffles/writes — the vector payload is pruned at
-                # the scan
-                matched.coalesce(1).write.mode("error").parquet(out)
-                self.io_counters["dv_writes"] = (
-                    self.io_counters.get("dv_writes", 0) + 1
-                )
-                dv_rels = sorted(
-                    os.path.join(sub, f)
-                    for f in os.listdir(out)
-                    if f.endswith(".parquet")
-                    and not f.startswith(("_", "."))
-                )
-                if dv_rels:
-                    covered = self._dv_covered_files(dv_rels)
-            if not covered and out is not None:
-                # nothing matched — still commit a no-op version so
-                # the operation is visible in history (cow parity)
-                shutil.rmtree(out, ignore_errors=True)
-            try:
-                _v, rebases = self._publish_mor(
-                    (None, [], {}, {}),
-                    base,
-                    m,
-                    covered,
-                    dv_rels if covered else [],
-                    "delete_where:mor",
-                    bmap,
-                )
-                self.last_delete_stats = {
-                    "files_total": len(files),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": 0,
-                    "retries": _attempt,
-                    "rebases": rebases,
-                }
-                self._dv_budget_check()
-                return self
-            except ConcurrentWriteError as exc:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                last_err = exc
-        raise last_err  # type: ignore[misc]
+        return self._retry(max_retries, attempt_fn)
 
     # ---------------------------------------------------------- DV budget
 
@@ -3016,10 +2891,8 @@ class VersionedCollection:
         bytes): uncovered files carry by reference, never a table
         rescan.  (Delta calls this REORG TABLE ... APPLY (PURGE).)"""
         id_col = self.properties.get("id_col")
-        last_err: Exception | None = None
-        for attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
+
+        def attempt_fn(attempt, base, m, schema):
             dv = m.get("dv") or {}
             if not dv:
                 return {
@@ -3029,46 +2902,33 @@ class VersionedCollection:
                 }
             covered = sorted({f for cov in dv.values() for f in cov})
             cset = set(covered)
-            schema = StructType.fromJson(json.loads(m["schema"]))
             stats = m.get("stats", {})
-            df = self._apply_dv(
-                self._read_files(covered, m, schema), m, schema
-            ).coalesce(max(1, len(covered)))
-            payload = self._write_payload(
-                df,
-                base + 1,
-                id_col,
-                stat_cols=_manifest_stat_cols(m),
-                mapping=self._commit_mapping(m, schema)[0] or None,
-            )
             carried = [f for f in m["files"] if f not in cset]
-            try:
-                self._publish_payload(
-                    payload,
-                    base + 1,
-                    base,
-                    "materialize_dvs",
-                    carried=carried,
-                    schema=schema,
-                    carried_stats={
-                        f: stats[f] for f in carried if f in stats
-                    },
-                    parent_manifest=m,
-                    dv={},  # every cover departs with its file
-                )
-                # sidecar parquet files are now unreferenced; vacuum
-                # retires them once their manifests age out
-                return {
-                    "rewritten": len(covered),
-                    "dv_dropped": len(dv),
-                    "version": base + 1,
-                    "retries": attempt,
-                }
-            except ConcurrentWriteError as exc:
-                if payload[0] is not None:
-                    shutil.rmtree(payload[0], ignore_errors=True)
-                last_err = exc
-        raise last_err  # type: ignore[misc]
+            self._commit(
+                self._apply_dv(
+                    self._read_files(covered, m, schema), m, schema
+                ).coalesce(len(covered)),
+                base + 1,
+                base,
+                "materialize_dvs",
+                carried,
+                schema,
+                carried_stats={f: stats[f] for f in carried if f in stats},
+                id_col=id_col,
+                stat_cols=_manifest_stat_cols(m),
+                parent_manifest=m,
+                dv={},  # every cover departs with its file
+            )
+            # sidecar parquet files are now unreferenced; vacuum
+            # retires them once their manifests age out
+            return {
+                "rewritten": len(covered),
+                "dv_dropped": len(dv),
+                "version": base + 1,
+                "retries": attempt,
+            }
+
+        return self._retry(max_retries, attempt_fn)
 
     # ---------------------------------------------------------- schema DDL
 
@@ -3163,11 +3023,8 @@ class VersionedCollection:
                     f"cannot rename the {role.split('_')[0]} column "
                     f"{old!r} — table properties address it by name"
                 )
-        last_err: Exception | None = None
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+
+        def attempt_fn(_attempt, base, m, schema):
             names = schema.fieldNames()
             if old not in names:
                 raise ValueError(
@@ -3200,21 +3057,19 @@ class VersionedCollection:
                 }
                 for f, cs in m.get("col_stats", {}).items()
             }
-            try:
-                self._publish_schema_ddl(
-                    m,
-                    base,
-                    "rename_column",
-                    new_schema,
-                    mapping,
-                    list(m.get("retired_columns") or []),
-                    col_stats,
-                    {"renamed": {old: new}},
-                )
-                return self
-            except ConcurrentWriteError as exc:
-                last_err = exc
-        raise last_err  # type: ignore[misc]
+            self._publish_schema_ddl(
+                m,
+                base,
+                "rename_column",
+                new_schema,
+                mapping,
+                list(m.get("retired_columns") or []),
+                col_stats,
+                {"renamed": {old: new}},
+            )
+            return self
+
+        return self._retry(max_retries, attempt_fn)
 
     def drop_column(
         self, name: str, max_retries: int = 3
@@ -3237,11 +3092,8 @@ class VersionedCollection:
                     f"cannot drop the {role.split('_')[0]} column "
                     f"{name!r}"
                 )
-        last_err: Exception | None = None
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+
+        def attempt_fn(_attempt, base, m, schema):
             if name not in schema.fieldNames():
                 raise ValueError(
                     f"column {name!r} not in table schema "
@@ -3261,21 +3113,19 @@ class VersionedCollection:
                 for f, cs in m.get("col_stats", {}).items()
             }
             col_stats = {f: cs for f, cs in col_stats.items() if cs}
-            try:
-                self._publish_schema_ddl(
-                    m,
-                    base,
-                    "drop_column",
-                    new_schema,
-                    mapping,
-                    retired,
-                    col_stats,
-                    {"dropped": name},
-                )
-                return self
-            except ConcurrentWriteError as exc:
-                last_err = exc
-        raise last_err  # type: ignore[misc]
+            self._publish_schema_ddl(
+                m,
+                base,
+                "drop_column",
+                new_schema,
+                mapping,
+                retired,
+                col_stats,
+                {"dropped": name},
+            )
+            return self
+
+        return self._retry(max_retries, attempt_fn)
 
     # --------------------------------------------------------- constraints
 
@@ -3668,7 +3518,10 @@ class VersionedCollection:
           (killing the old versions in place) and the updated rows are
           appended as a NEW file in the same commit.  A point update
           on a 100 TB table is two narrow jobs plus a KB-sized write;
-          the next rewrite of a covered file folds the DV away.
+          the next rewrite of a covered file folds the DV away.  The
+          append semi-joins the SIDECAR back against only the covered
+          files — the exact matched rows, so a non-deterministic
+          predicate can't diverge between the two jobs.
 
         Either way :meth:`changes` surfaces the span as
         ``update_postimage`` (+ ``update_preimage`` when asked) rows —
@@ -3690,250 +3543,100 @@ class VersionedCollection:
         id_col = self.properties["id_col"]
         bmap = _predicate_col_bounds(predicate)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if mode == "mor":
-            return self._update_where_mor(
-                pred, set_exprs, max_retries, bmap
-            )
-        last_err: Exception | None = None
-        for _attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
+
+        def attempt_fn(attempt, base, m, schema):
             setx = self._resolve_set_exprs(set_exprs, schema)
-            stats = m.get("stats", {})
-            files = m["files"]
             candidates, pruned = _stats_candidates_multi(
-                files, stats, m.get("col_stats", {}), bmap, id_col
+                m["files"], m.get("stats", {}), m.get("col_stats", {}),
+                bmap, id_col,
             )
-            matched_files: set[str] = set()
-            if candidates:
-                cand = self._read_files(candidates, m, schema)
-                hit_files = (
-                    cand.filter(pred)
-                    .withColumn("_vc_file", F.input_file_name())
-                    .select("_vc_file")
-                    .distinct()
-                    .collect()
+            guard = self._constraint_guard(id_col)
+
+            def apply_set(src, exprs):
+                out = src.select(
+                    *[
+                        exprs[c].alias(c) if c in exprs else F.col(c)
+                        for c in schema.fieldNames()
+                    ]
                 )
-                matched_files = {self._rel_of_uri(r[0]) for r in hit_files}
-            if not matched_files:
-                survivors = None  # no-op version, history parity
-            else:
+                # checked against the row AS WRITTEN (post-SET);
+                # rewriting a legacy row that violates a later-added
+                # constraint fails, Delta-style
+                return out if guard is None else out.withColumn(
+                    id_col, guard
+                )
+
+            if mode == "mor":
+
+                def append(covered, dv_rels):
+                    if not covered:
+                        return None
+                    dv_schema = StructType(
+                        [StructField(_DV_FILE_COL, StringType(), False)]
+                        + [f for f in schema.fields if f.name == id_col]
+                    )
+                    # the sidecar IS the matched-row set: semi-join it
+                    # back against only the covered files
+                    # (footer-pruned read) and apply SET — the
+                    # predicate is never re-evaluated
+                    sidecar = self.spark.read.schema(dv_schema).parquet(
+                        *(os.path.join(self.path, r) for r in dv_rels)
+                    )
+                    upd_src = (
+                        self._read_files(covered, m, schema)
+                        .withColumn(_DV_FILE_COL, _rel_file_col())
+                        .join(
+                            F.broadcast(sidecar),
+                            [_DV_FILE_COL, id_col],
+                            "semi",
+                        )
+                    )
+                    return apply_set(upd_src, setx).coalesce(len(covered))
+
+                return self._commit_mor(
+                    "last_update_stats",
+                    attempt,
+                    base,
+                    m,
+                    schema,
+                    candidates,
+                    pruned,
+                    lambda cand: cand.filter(F.coalesce(pred, F.lit(False))),
+                    append,
+                    "update_where:mor",
+                    bmap,
+                )
+            matched_files = self._files_matching(candidates, m, schema, pred)
+            survivors = None  # no-op version, history parity
+            if matched_files:
                 src = self._apply_dv(
                     self._read_files(sorted(matched_files), m, schema),
                     m,
                     schema,
                 ).withColumn("_vc_hit", F.coalesce(pred, F.lit(False)))
                 hit = F.col("_vc_hit")
-                survivors = src.select(
-                    *[
-                        (
-                            F.when(hit, setx[c])
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            if c in setx
-                            else F.col(c)
-                        )
-                        for c in schema.fieldNames()
-                    ]
-                )
-                guard = self._constraint_guard(id_col)
-                if guard is not None:
-                    # checked against the row AS WRITTEN (post-SET);
-                    # rewriting a legacy row that violates a
-                    # later-added constraint fails, Delta-style
-                    survivors = survivors.withColumn(id_col, guard)
-                survivors = survivors.coalesce(
-                    max(1, len(matched_files))
-                )
-            payload = self._write_payload(
+                survivors = apply_set(
+                    src,
+                    {
+                        c: F.when(hit, e).otherwise(F.col(c))
+                        for c, e in setx.items()
+                    },
+                ).coalesce(len(matched_files))
+            return self._commit_cow(
+                "last_update_stats",
+                attempt,
+                base,
+                m,
+                candidates,
+                pruned,
+                matched_files,
                 survivors,
-                base + 1,
-                id_col,
-                stat_cols=_manifest_stat_cols(m),
-                mapping=self._commit_mapping(m, schema)[0] or None,
+                schema,
+                "update_where",
+                bmap,
             )
-            try:
-                _v, rebases = self._publish_merge(
-                    payload,
-                    base,
-                    m,
-                    matched_files,
-                    schema,
-                    "update_where",
-                    bmap,
-                )
-                self.last_update_stats = {
-                    "files_total": len(files),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": len(matched_files),
-                    "retries": _attempt,
-                    "rebases": rebases,
-                }
-                return self
-            except ConcurrentWriteError as exc:
-                last_err = exc
-        raise last_err  # type: ignore[misc]
 
-    def _update_where_mor(
-        self,
-        pred,
-        set_exprs: dict,
-        max_retries: int,
-        bmap: dict | None = None,
-    ) -> "VersionedCollection":
-        """Merge-on-read UPDATE: job 1 writes the matched ``(file,
-        id)`` pairs as a deletion-vector sidecar (old versions die in
-        place, zero data rewrite); job 2 semi-joins the SIDECAR back
-        against only the covered files — the exact matched rows, so a
-        non-deterministic predicate can't diverge between the two
-        jobs — applies the SET expressions, and appends the result as
-        new data file(s) in the SAME commit.  Commit bytes ∝ updated
-        rows; every parent file carries."""
-        id_col = self.properties["id_col"]
-        last_err: Exception | None = None
-        for _attempt in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            setx = self._resolve_set_exprs(set_exprs, schema)
-            files = m["files"]
-            candidates, pruned = _stats_candidates_multi(
-                files, m.get("stats", {}), m.get("col_stats", {}),
-                bmap or {}, id_col,
-            )
-            dv_rels: list[str] = []
-            covered: list[str] = []
-            out: str | None = None
-            if candidates:
-                cand = self._read_files(
-                    candidates, m, schema
-                ).withColumn(_DV_FILE_COL, _rel_file_col())
-                dvdf = self._dv_frame(m, schema)
-                if dvdf is not None:
-                    cand = cand.join(
-                        F.broadcast(dvdf),
-                        [_DV_FILE_COL, id_col],
-                        "left_anti",
-                    )
-                matched = cand.filter(
-                    F.coalesce(pred, F.lit(False))
-                ).select(F.col(_DV_FILE_COL), F.col(id_col))
-                sub = os.path.join(
-                    _DATA_DIR,
-                    f"c{base + 1:08d}-dv-{uuid.uuid4().hex[:8]}",
-                )
-                out = os.path.join(self.path, sub)
-                matched.coalesce(1).write.mode("error").parquet(out)
-                self.io_counters["dv_writes"] = (
-                    self.io_counters.get("dv_writes", 0) + 1
-                )
-                dv_rels = sorted(
-                    os.path.join(sub, f)
-                    for f in os.listdir(out)
-                    if f.endswith(".parquet")
-                    and not f.startswith(("_", "."))
-                )
-                if dv_rels:
-                    covered = self._dv_covered_files(dv_rels)
-            if not covered:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                try:
-                    _v, rebases = self._publish_mor(
-                        (None, [], {}, {}),
-                        base,
-                        m,
-                        [],
-                        [],
-                        "update_where:mor",
-                        bmap,
-                    )
-                    self.last_update_stats = {
-                        "files_total": len(files),
-                        "files_pruned_by_stats": pruned,
-                        "files_scanned": len(candidates),
-                        "files_rewritten": 0,
-                        "retries": _attempt,
-                        "rebases": rebases,
-                    }
-                    return self
-                except ConcurrentWriteError as exc:
-                    last_err = exc
-                    continue
-            id_field = [f for f in schema.fields if f.name == id_col]
-            dv_schema = StructType(
-                [StructField(_DV_FILE_COL, StringType(), False)]
-                + id_field
-            )
-            # the sidecar IS the matched-row set: semi-join it back
-            # against only the covered files (footer-pruned read) and
-            # apply SET — the predicate is never re-evaluated
-            upd_src = (
-                self._read_files(covered, m, schema)
-                .withColumn(_DV_FILE_COL, _rel_file_col())
-                .join(
-                    F.broadcast(
-                        self.spark.read.schema(dv_schema).parquet(
-                            *(
-                                os.path.join(self.path, r)
-                                for r in dv_rels
-                            )
-                        )
-                    ),
-                    [_DV_FILE_COL, id_col],
-                    "semi",
-                )
-            )
-            updated = upd_src.select(
-                *[
-                    (setx[c].alias(c) if c in setx else F.col(c))
-                    for c in schema.fieldNames()
-                ]
-            )
-            guard = self._constraint_guard(id_col)
-            if guard is not None:
-                updated = updated.withColumn(id_col, guard)
-            updated = updated.coalesce(max(1, len(covered)))
-            try:
-                payload = self._write_payload(
-                    updated,
-                    base + 1,
-                    id_col,
-                    stat_cols=_manifest_stat_cols(m),
-                    mapping=self._commit_mapping(m, schema)[0] or None,
-                )
-                _v, rebases = self._publish_mor(
-                    payload,
-                    base,
-                    m,
-                    covered,
-                    dv_rels,
-                    "update_where:mor",
-                    bmap,
-                )
-                self.last_update_stats = {
-                    "files_total": len(files),
-                    "files_pruned_by_stats": pruned,
-                    "files_scanned": len(candidates),
-                    "files_rewritten": 0,
-                    "retries": _attempt,
-                    "rebases": rebases,
-                }
-                self._dv_budget_check()
-                return self
-            except ConcurrentWriteError as exc:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                last_err = exc
-            except Exception:
-                # e.g. a CHECK-constraint violation in the data job:
-                # nothing committed — sweep the sidecar, don't orphan
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                raise
-        raise last_err  # type: ignore[misc]
+        return self._retry(max_retries, attempt_fn)
 
     # ------------------------------------------------------------- compact
 

@@ -117,6 +117,42 @@ def test_mor_delete_no_match_commits_noop(spark, tmp_path):
     assert _state(c) == {(i, 10 * i) for i in range(8)}
 
 
+@pytest.mark.parametrize(
+    "write",
+    [
+        pytest.param(
+            lambda c, s: c.delete_where("id >= 6", mode="mor"),
+            id="delete_where",
+        ),
+        pytest.param(
+            lambda c, s: c.update_where(
+                "id >= 6", {"label": "label + 1"}, mode="mor"
+            ),
+            id="update_where",
+        ),
+        pytest.param(
+            lambda c, s: c.merge_mor(_mk(s, [(6, 66)])), id="merge_mor"
+        ),
+    ],
+)
+def test_mor_write_failing_before_publish_sweeps_sidecar(
+    spark, tmp_path, monkeypatch, write
+):
+    """Any failure between the sidecar write and the publish (not only
+    a lost race) removes the sidecar: nothing references it yet."""
+    c = _clustered(spark, tmp_path, "morfail")
+
+    def boom(*a, **kw):
+        raise RuntimeError("publish failed")
+
+    monkeypatch.setattr(VersionedCollection, "_publish_mor", boom)
+    with pytest.raises(RuntimeError, match="publish failed"):
+        write(c, spark)
+    assert c.latest_version() == 0
+    data_dir = os.path.join(c.path, "data")
+    assert not [d for d in os.listdir(data_dir) if "-dv-" in d]
+
+
 def test_compact_and_recluster_materialize_dv(spark, tmp_path):
     c = _clustered(spark, tmp_path, "mor6")
     c.delete_where("id in (2, 5)", mode="mor")

@@ -383,9 +383,47 @@ def test_normalize_false_persisted_and_honored_on_merge(spark, tmp_path):
     assert vecs[1] == [1.0, 1.0, 0.0]
 
 
-def test_merge_rejects_nonpositive_max_retries(coll, spark):
+@pytest.mark.parametrize(
+    "write",
+    [
+        pytest.param(
+            lambda c, s: c.merge(_mk(s, [(0, 1)]), max_retries=0),
+            id="merge",
+        ),
+        pytest.param(
+            lambda c, s: c.merge_mor(_mk(s, [(0, 1)]), max_retries=0),
+            id="merge_mor",
+        ),
+        pytest.param(
+            lambda c, s: c.delete_where("id = 0", max_retries=0),
+            id="delete_where",
+        ),
+        pytest.param(
+            lambda c, s: c.update_where(
+                "id = 0", {"label": "1"}, max_retries=0
+            ),
+            id="update_where",
+        ),
+        pytest.param(
+            lambda c, s: c.materialize_dvs(max_retries=0),
+            id="materialize_dvs",
+        ),
+        pytest.param(
+            lambda c, s: c.rename_column("label", "score", max_retries=0),
+            id="rename_column",
+        ),
+        pytest.param(
+            lambda c, s: c.drop_column("label", max_retries=0),
+            id="drop_column",
+        ),
+    ],
+)
+def test_merge_rejects_nonpositive_max_retries(coll, spark, write):
+    """Every retrying write rejects max_retries < 1 up front instead of
+    skipping its commit loop."""
     with pytest.raises(ValueError, match="max_retries"):
-        coll.merge(_mk(spark, [(0, 1)]), max_retries=0)
+        write(coll, spark)
+    assert coll.latest_version() == 0
 
 
 def test_lost_publish_race_sweeps_its_own_files(coll, spark):
@@ -758,26 +796,133 @@ def test_versioned_state_machine_matches_model(spark, tmp_path_factory, ops):
         }, f"version {v} diverged from model"
 
 
-def test_merge_broadcast_keys_override_same_result(spark, tmp_path):
-    """broadcast_keys=False (the huge-backfill path: shuffle semi/anti
-    joins instead of broadcasting the key set) must produce exactly
-    the broadcast path's result."""
-    for flag, name in ((True, "bk1"), (False, "bk0")):
-        c = VersionedCollection(spark, str(tmp_path), name)
-        c.create(
-            _mk(spark, [(i, 10 * i) for i in range(12)]).repartition(
-                3, "id"
+@pytest.mark.parametrize("write", ["merge", "merge_mor"])
+def test_merge_shuffle_join_path_same_result(
+    spark, tmp_path, monkeypatch, write
+):
+    """With the small-batch, fused-rewrite and broadcast thresholds at
+    0 (and Spark's own broadcast conversion off) an upsert takes the
+    huge-backfill path: the distributed validation aggregation, then a
+    shuffle semi-join for matched-file discovery (and, copy-on-write,
+    a shuffle anti-join for the survivors).  It must land exactly the
+    small-batch path's result."""
+    from legalchatbot_vectordb_exp_spark.sources import versioned as V
+
+    c = VersionedCollection(spark, str(tmp_path), "shuffle")
+    c.create(
+        _mk(spark, [(i, 10 * i) for i in range(12)]).repartition(3, "id"),
+        dim=3,
+        metric="dot",
+        normalize=False,
+    )
+    for name in (
+        "_ISIN_PUSHDOWN_LIMIT",
+        "_LOCAL_REWRITE_MAX_BYTES",
+        "_BROADCAST_KEY_LIMIT",
+    ):
+        monkeypatch.setattr(V, name, 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        getattr(c, write)(_mk(spark, [(2, 222), (20, 200)]))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert _state(c) == {
+        (i, 10 * i) for i in range(12) if i != 2
+    } | {(2, 222), (20, 200)}, write
+
+
+def _mor_delete(c, spark):
+    c.delete_where("id = 3", mode="mor")
+
+
+@pytest.mark.parametrize(
+    "metric,patch,prep,op,jobs",
+    [
+        pytest.param(
+            "cosine", {}, None,
+            lambda c, s: c.merge(_mk(s, [(2, 222), (20, 200)])),
+            4, id="merge-cosine-distributed",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.merge(_mk(s, [(2, 222), (20, 200)])),
+            3, id="merge-dot-fused",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.merge(_mk(s, [(2, 0)]), when_matched="delete"),
+            3, id="merge-delete",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.merge_mor(_mk(s, [(2, 222), (20, 200)])),
+            4, id="merge_mor",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.delete_where("id >= 6"),
+            1, id="delete_where-cow-fused",
+        ),
+        pytest.param(
+            "dot", {"_LOCAL_REWRITE_MAX_BYTES": 0}, None,
+            lambda c, s: c.delete_where("id >= 6"),
+            3, id="delete_where-cow-distributed",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.delete_where("id >= 6", mode="mor"),
+            1, id="delete_where-mor",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.update_where("id = 2", {"label": "label + 1"}),
+            3, id="update_where-cow",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.update_where(
+                "id = 2", {"label": "label + 1"}, mode="mor"
             ),
-            dim=3,
-            metric="dot",
-            normalize=False,
-        )
-        c.merge(
-            _mk(spark, [(2, 222), (20, 200)]), broadcast_keys=flag
-        )
-        assert _state(c) == {
-            (i, 10 * i) for i in range(12) if i != 2
-        } | {(2, 222), (20, 200)}, f"broadcast_keys={flag}"
+            3, id="update_where-mor",
+        ),
+        pytest.param(
+            "dot", {}, _mor_delete,
+            lambda c, s: c.materialize_dvs(),
+            2, id="materialize_dvs",
+        ),
+    ],
+)
+def test_write_path_spark_job_counts(
+    spark, tmp_path, monkeypatch, metric, patch, prep, op, jobs
+):
+    """Each row-level write path runs a pinned number of Spark jobs on
+    a two-file table: a refactor of the commit protocol must keep the
+    work (the jobs), not only the resulting rows.  ``patch`` shrinks
+    a routing threshold after create to force the distributed path."""
+    from legalchatbot_vectordb_exp_spark.sources import versioned as V
+
+    c = VersionedCollection(spark, str(tmp_path), "jobs")
+    c.create(
+        _mk(spark, [(i, 10 * i) for i in range(8)]).repartition(2, "id"),
+        dim=3,
+        metric=metric,
+        normalize=metric == "cosine",
+    )
+    for name, value in patch.items():
+        monkeypatch.setattr(V, name, value)
+    if prep is not None:
+        prep(c, spark)
+    sc = spark.sparkContext
+    group = f"vc-write-jobs-{os.path.basename(str(tmp_path))}"
+    sc.setJobGroup(group, "write path job count")
+    try:
+        op(c, spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_vacuum_crash_before_manifest_unlink_keeps_log_readable(
