@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Census freshness gate (round-15 verdict item 2).
 
-``CORRECTNESS_local_sf001.json`` is the committed 152-query oracle
+``CORRECTNESS_local_sf001.json`` is the committed 183-query oracle
 census.  In round 15 a package commit landed 10 minutes AFTER the
 census regen, so the committed artifact no longer proved the committed
 tree — only a judge's fresh sweep showed the edit was harmless.  This

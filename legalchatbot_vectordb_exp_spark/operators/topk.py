@@ -31,11 +31,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
 
-from legalchatbot_vectordb_exp_spark.functions.vector import dot, cosine_sim
+from legalchatbot_vectordb_exp_spark.functions.vector import (
+    cosine_sim,
+    dot,
+    vector_lit,
+)
 
 
 def _score(vec_col: str, query: Sequence[float], metric: str):
-    qlit = F.array(*[F.lit(float(x)) for x in query])
+    qlit = vector_lit(query)
     if metric == "dot":
         return dot(F.col(vec_col), qlit)
     if metric == "cosine":

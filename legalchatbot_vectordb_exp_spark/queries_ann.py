@@ -33,7 +33,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from legalchatbot_vectordb_exp_spark.functions.vector import dot
+from legalchatbot_vectordb_exp_spark.functions.vector import dot, vector_lit
+from legalchatbot_vectordb_exp_spark.operators.topk import topk_search
 from legalchatbot_vectordb_exp_spark.io_tables import load_table
 from legalchatbot_vectordb_exp_spark.registry import register, sql_dot
 from legalchatbot_vectordb_exp_spark.staging import fresh, scratch, stage
@@ -79,12 +80,17 @@ def ivf_nlist_for(n_rows: int) -> int:
 
 
 def ivf_best_cells(E, cids, cmat):
-    """THE coarse quantizer — nearest deterministic centroid per row.
+    """The numpy coarse quantizer — nearest deterministic centroid per row.
 
-    Single definition shared by every IVF consumer (ann_ivf_topk,
-    ann_ivf_topk_batch, ann_ivfpq_topk's assign_encode, and SemDeDup's
-    cell blocking in queries_scale.py), so an IVF change can never
-    silently shift dedup groups relative to search cells.  Dims fold
+    One of two quantizers.  This one serves the ``queries_ann`` IVF
+    queries (ann_ivf_topk, ann_ivf_topk_batch, ann_ivfpq_topk's
+    assign_encode) and SemDeDup's cell blocking in queries_scale.py, so
+    an IVF change can never silently shift dedup groups relative to
+    search cells; it stays a kernel because ``make_ivf_assign`` prunes
+    unprobed rows inside it, before they cross back to the JVM.  The
+    other, ``functions.vector.nearest_centroid``, is the Column
+    expression ``VectorCollection`` assigns with at write time (ties to
+    the smaller cid by struct order, no penalty).  Dims fold
     column-sequentially (same IEEE order as the SQL oracle's
     aggregate(zip_with(...))); argmax ties break toward the SMALLER
     centroid id via the tiny id-proportional penalty, matching the
@@ -340,15 +346,11 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )[:NPROBE]
     )
 
-    qlit = F.array(*[F.lit(x) for x in qvec])
     probed = emb.mapInPandas(
         make_ivf_assign(cids, cmat, probe=probe), schema=IVF_ASSIGN_SCHEMA
     )
-    return (
-        probed.withColumn("score", dot("embedding", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", F.round("score", 6).alias("score"))
+    return topk_search(probed, qvec).select(
+        "vec_id", F.round("score", 6).alias("score")
     )
 
 
@@ -1087,12 +1089,8 @@ def _ivf_probe_top5(coll, qvec, probe) -> DataFrame:
             for c in probe
         ]
     )
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    return (
-        cand.withColumn("score", dot("vector", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", "cluster_id", F.round("score", 6).alias("score"))
+    return topk_search(cand, qvec, vec_col="vector").select(
+        "vec_id", "cluster_id", F.round("score", 6).alias("score")
     )
 
 
@@ -2067,13 +2065,8 @@ def q_ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(stats["n"]), int(stats["m"]), nlist=ivf_nlist_for(int(stats["n"]))
     )
     assert branch == "full_scan", branch  # selectivity pins the branch
-    qlit = F.array(*[F.lit(float(x)) for x in stats["qv"]])
-    return (
-        emb.filter(flt)
-        .withColumn("score", dot("embedding", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", "label", F.round("score", 6).alias("score"))
+    return topk_search(emb.filter(flt), stats["qv"]).select(
+        "vec_id", "label", F.round("score", 6).alias("score")
     )
 
 
@@ -2157,7 +2150,6 @@ def q_ann_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cmat = [list(map(float, r[1])) for r in meta if int(r[0]) % mod == 0]
     qvec = [float(x) for r in meta if int(r[0]) == 1 for x in r[1]]
     probe = set(escalated_probe(qvec, cids, cmat, n, m))
-    qlit = F.array(*[F.lit(x) for x in qvec])
     probed = (
         emb.filter(F.col("label") == FILTER_LABEL)
         .select("vec_id", "embedding")
@@ -2166,11 +2158,8 @@ def q_ann_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema=IVF_ASSIGN_SCHEMA,
         )
     )
-    return (
-        probed.withColumn("score", dot("embedding", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", F.round("score", 6).alias("score"))
+    return topk_search(probed, qvec).select(
+        "vec_id", F.round("score", 6).alias("score")
     )
 
 
@@ -2237,8 +2226,7 @@ def q_ann_group_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in emb.filter(F.col("vec_id") == 1).head()["embedding"]
     ]
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    scored = emb.withColumn("s", dot("embedding", qlit))
+    scored = emb.withColumn("s", dot("embedding", vector_lit(qvec)))
     w_hit = Window.partitionBy("label").orderBy(
         F.desc("s"), F.col("vec_id").asc()
     )
@@ -2395,14 +2383,8 @@ def q_ann_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").isin(list(RECO_POS + RECO_NEG))
         ).collect()
     }
-    pos_scores = [
-        dot("embedding", F.array(*[F.lit(x) for x in examples[i]]))
-        for i in RECO_POS
-    ]
-    neg_scores = [
-        dot("embedding", F.array(*[F.lit(x) for x in examples[i]]))
-        for i in RECO_NEG
-    ]
+    pos_scores = [dot("embedding", vector_lit(examples[i])) for i in RECO_POS]
+    neg_scores = [dot("embedding", vector_lit(examples[i])) for i in RECO_NEG]
     s = F.greatest(*pos_scores) if len(pos_scores) > 1 else pos_scores[0]
     t = F.greatest(*neg_scores) if len(neg_scores) > 1 else neg_scores[0]
     best_score = F.when(s > t, s).otherwise(-(t * t))
@@ -2511,12 +2493,8 @@ def q_ann_filtered_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in probe
         ]
     )
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    return (
-        cand.withColumn("score", dot("vector", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", F.round("score", 6).alias("score"))
+    return topk_search(cand, qvec, vec_col="vector").select(
+        "vec_id", F.round("score", 6).alias("score")
     )
 
 
@@ -2564,12 +2542,8 @@ def q_ann_named_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = [
         float(x) for x in pts.filter(F.col("vec_id") == 1).head()["title"]
     ]
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    return (
-        pts.withColumn("score", dot("title", qlit))
-        .orderBy(F.desc("score"), F.col("vec_id").asc())
-        .limit(5)
-        .select("vec_id", F.round("score", 6).alias("score"))
+    return topk_search(pts, qvec, vec_col="title").select(
+        "vec_id", F.round("score", 6).alias("score")
     )
 
 
@@ -3385,7 +3359,7 @@ def q_ann_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def lit_dot(eid):
-        return dot("embedding", F.array(*[F.lit(x) for x in vecs[eid]]))
+        return dot("embedding", vector_lit(vecs[eid]))
 
     pairs_ok = None
     for pos, neg in DISC_PAIRS:

@@ -173,18 +173,40 @@ def _stage_ordered_log(
     return stage(spark, sf_dir, f"events_{variant}", build)
 
 
-def _replay_checkpoint_dir() -> str:
-    """Fresh checkpoint dir for an availableNow replay, on tmpfs when
-    the host has one: the offset/commit WAL is many tiny fsync'd
-    files, which dominates a short replay's wall clock on disk
-    (measured 1.7 s → 1.3 s at sf0.1).  A production deployment
-    points this at durable shared storage instead — the replay demos
-    are one-shot and never resumed, so durability buys nothing here."""
+def replay_to_memory(frame: DataFrame, name: str) -> None:
+    """Run a streaming ``frame`` once (availableNow) into the append-mode
+    memory sink ``name`` and wait for it.  The checkpoint dir is on
+    tmpfs when the host has one: the offset/commit WAL is many tiny
+    fsync'd files, which dominates a short replay's wall clock on disk
+    (measured 1.7 s → 1.3 s at sf0.1).  A production deployment points
+    it at durable shared storage instead — the replays are one-shot and
+    never resumed, so the dir is removed once the query has stopped."""
     import os
+    import shutil
     import tempfile
 
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(dir=root, prefix="stream_ckpt_")
+    ckpt = tempfile.mkdtemp(dir=root, prefix="stream_ckpt_")
+    try:
+        q = (
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            # a timed-out replay would read a PARTIAL memory sink
+            # (nondeterministic result) and leave the query running
+            # against staging a later run may clear — stop it and fail
+            # loudly instead
+            q.stop()
+            raise TimeoutError(
+                f"streaming replay {name} did not finish in 300s"
+            )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -264,24 +286,7 @@ def q_events_streaming_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(min(int(prev_parts), 4))
         )
-        q = (
-            tumbling_counts(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _replay_checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # a timed-out replay would read a PARTIAL memory
-            # sink (nondeterministic result) and leave the
-            # query running against staging a later run may
-            # clear — stop it and fail loudly instead
-            q.stop()
-            raise TimeoutError(
-                f"streaming replay {name} did not finish in 300s"
-            )
+        replay_to_memory(tumbling_counts(stream), name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name).select(
@@ -418,23 +423,7 @@ def q_events_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", "false"
         )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _replay_checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # a timed-out replay would read a PARTIAL memory
-            # sink (nondeterministic result) and leave the
-            # query running against staging a later run may
-            # clear — stop it and fail loudly instead
-            q.stop()
-            raise TimeoutError(
-                f"streaming replay {name} did not finish in 300s"
-            )
+        replay_to_memory(joined, name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set(

@@ -784,9 +784,7 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_changes_stream,
         stage_changes_feed,
     )
-    from legalchatbot_vectordb_exp_spark.queries_events import (
-        _replay_checkpoint_dir,
-    )
+    from legalchatbot_vectordb_exp_spark.queries_events import replay_to_memory
 
     # The staged commit log is deterministic for a given sf_dir, so the
     # history is built and staged once per process and repeat runs
@@ -871,23 +869,7 @@ def q_cdf_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("net_label"),
             )
         )
-        q = (
-            folded.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _replay_checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # a timed-out replay would read a PARTIAL memory
-            # sink (nondeterministic result) and leave the
-            # query running against staging a later run may
-            # clear — stop it and fail loudly instead
-            q.stop()
-            raise TimeoutError(
-                f"streaming replay {name} did not finish in 300s"
-            )
+        replay_to_memory(folded, name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name).select(

@@ -30,7 +30,14 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from legalchatbot_vectordb_exp_spark.functions.vector import l2_norm, l2_normalize
+from legalchatbot_vectordb_exp_spark.functions.vector import (
+    dot,
+    l2_norm,
+    l2_normalize,
+    nearest_centroid,
+    normalize_vec,
+    vector_lit,
+)
 
 _PROPS_FILE = "_collection.json"
 
@@ -345,8 +352,6 @@ class VectorCollection:
         tolerate.  Centroid vectors are stored in the properties
         sidecar so probing needs no table scan.
         """
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
         out = self._validated(df, dim, vector_col, id_col)
         out = out.withColumn(vector_col, l2_normalize(vector_col))
 
@@ -364,8 +369,9 @@ class VectorCollection:
         for _ in range(kmeans_iters):
             centroids = self._lloyd_round(out, centroids, dim, vector_col)
 
-        assigned = self._assign_clusters(out, centroids, vector_col)
-
+        assigned = out.withColumn(
+            "cluster_id", nearest_centroid(vector_col, centroids)
+        )
         assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
             self.path
         )
@@ -392,9 +398,9 @@ class VectorCollection:
         the unit sphere.  Empty clusters keep their previous centroid.
         The aggregate is dim wide avg columns (map-side combine), so
         the shuffle carries one dim-wide row per cluster."""
-        import math
-
-        assigned = self._assign_clusters(df, centroids, vector_col)
+        assigned = df.withColumn(
+            "cluster_id", nearest_centroid(vector_col, centroids)
+        )
         comps = [
             F.avg(F.col(vector_col)[i].cast("double")).alias(f"_c{i}")
             for i in range(dim)
@@ -402,28 +408,10 @@ class VectorCollection:
         stats = assigned.groupBy("cluster_id").agg(*comps).collect()
         refined = dict(centroids)
         for r in stats:
-            vec = [float(r[f"_c{i}"]) for i in range(dim)]
-            norm = math.sqrt(sum(x * x for x in vec)) or 1.0
-            refined[r["cluster_id"]] = [x / norm for x in vec]
+            refined[r["cluster_id"]] = normalize_vec(
+                [float(r[f"_c{i}"]) for i in range(dim)]
+            )
         return sorted(refined.items())
-
-    @staticmethod
-    def _assign_clusters(
-        df: DataFrame, centroids, vector_col: str
-    ) -> DataFrame:
-        """Nearest-centroid id per row: fold over the (small) centroid
-        list — a codegen'd expression chain, no shuffle."""
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
-        best = None
-        for cid, cvec in centroids:
-            clit = F.array(*[F.lit(x) for x in cvec])
-            score = dot(F.col(vector_col), clit)
-            cur = F.struct(score.alias("s"), F.lit(int(cid)).alias("cid"))
-            best = cur if best is None else F.when(
-                cur["s"] > best["s"], cur
-            ).otherwise(best)
-        return df.withColumn("cluster_id", best["cid"])
 
     def upsert_ivf(self, df: DataFrame) -> "VectorCollection":
         """Partition-scoped upsert for IVF collections — the scale
@@ -451,8 +439,8 @@ class VectorCollection:
         id_col, vector_col = props["id_col"], props["vector_col"]
         incoming = self._validated(df, props["dim"], vector_col, id_col)
         incoming = incoming.withColumn(vector_col, l2_normalize(vector_col))
-        incoming = self._assign_clusters(
-            incoming, props["centroids"], vector_col
+        incoming = incoming.withColumn(
+            "cluster_id", nearest_centroid(vector_col, props["centroids"])
         )
 
         new_cells = {
@@ -598,13 +586,10 @@ class VectorCollection:
         searches of the same filter plan from the cache, and any
         write-path method would invalidate by clearing
         ``_CARD_CACHE``."""
-        import math
-
         from legalchatbot_vectordb_exp_spark.operators.topk import topk_search
 
         props = self.properties
-        qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-        q = [x / qn for x in query_vec]
+        q = normalize_vec(query_vec)
         base = self.read()
         if where is not None:
             from legalchatbot_vectordb_exp_spark.queries_ann import (
@@ -1487,8 +1472,6 @@ class VectorCollection:
         """Top-k in ONE named vector space (``search(using="title")``).
         The scan projects only the id, payload, and the chosen name's
         column; a payload predicate composes as pre-filtering."""
-        import math
-
         from legalchatbot_vectordb_exp_spark.operators.topk import topk_search
 
         props = self.properties
@@ -1504,8 +1487,7 @@ class VectorCollection:
             )
         q = list(map(float, query_vec))
         if cfg["metric"] == "cosine":
-            qn = math.sqrt(sum(x * x for x in q)) or 1.0
-            q = [x / qn for x in q]
+            q = normalize_vec(q)
         base = self.read()
         if where is not None:
             base = base.filter(
@@ -1538,22 +1520,16 @@ class VectorCollection:
         the group ranking then runs over the ≤ groups·per_group capped
         frame.  Exact semantics — plan mirrors the oracle-checked
         ``ann_group_search`` query."""
-        import math
-
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
         props = self.properties
         q = list(map(float, query_vec))
         if props.get("metric") == "cosine":
             # normalize ONLY under cosine — a dot-metric collection's
             # scores must match search_named/recommend and the
             # oracle-checked ann_group_search plan this mirrors
-            qn = math.sqrt(sum(x * x for x in q)) or 1.0
-            q = [x / qn for x in q]
-        qlit = F.array(*[F.lit(x) for x in q])
+            q = normalize_vec(q)
         id_col = props["id_col"]
         scored = self.read().withColumn(
-            "score", dot(props["vector_col"], qlit)
+            "score", dot(props["vector_col"], vector_lit(q))
         )
         w_hit = Window.partitionBy(group_by).orderBy(
             F.desc("score"), F.col(id_col).asc()
@@ -1656,8 +1632,6 @@ class VectorCollection:
         TakeOrderedAndProject — zero shuffles, the
         single-query-search shape regardless of example count.
         Mirrors the oracle-checked ``ann_recommend`` query."""
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
         props = self.properties
         id_col, vec_col = props["id_col"], props["vector_col"]
         negative = negative or []
@@ -1678,10 +1652,7 @@ class VectorCollection:
             raise ValueError(f"recommend: example ids not found: {missing}")
 
         def best(example_ids):
-            scores = [
-                dot(vec_col, F.array(*[F.lit(x) for x in vecs[i]]))
-                for i in example_ids
-            ]
+            scores = [dot(vec_col, vector_lit(vecs[i])) for i in example_ids]
             return F.greatest(*scores) if len(scores) > 1 else scores[0]
 
         s = best(positive)
@@ -1735,8 +1706,6 @@ class VectorCollection:
         the plan is scan → expressions → TakeOrderedAndProject — zero
         shuffles at any example count.  Mirrors the oracle-checked
         ``ann_discover`` query."""
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
         props = self.properties
         id_col, vec_col = props["id_col"], props["vector_col"]
         ids = [target] + [x for pair in context for x in pair]
@@ -1752,9 +1721,7 @@ class VectorCollection:
             raise ValueError(f"discover: example ids not found: {missing}")
 
         def lit_dot(example_id):
-            return dot(
-                vec_col, F.array(*[F.lit(x) for x in vecs[example_id]])
-            )
+            return dot(vec_col, vector_lit(vecs[example_id]))
 
         pairs_ok = None
         for pos, neg in context:
@@ -1786,8 +1753,6 @@ class VectorCollection:
         sample²: the cap is the API contract that keeps the matrix
         user-facing-bounded no matter the filter's selectivity.
         Mirrors the oracle-checked ``ann_search_matrix`` query."""
-        from legalchatbot_vectordb_exp_spark.functions.vector import dot
-
         props = self.properties
         id_col, vec_col = props["id_col"], props["vector_col"]
         flt = F.expr(where) if isinstance(where, str) else where

@@ -143,3 +143,20 @@ def test_stream_interval_join_matches_batch(spark, event_dir):
         (r.event_id, r.r_event_id) for r in expect.collect()
     )
     assert got_pairs == exp_pairs and len(got_pairs) > 0
+
+
+def test_streaming_replay_leaves_no_checkpoint_dir(spark, sf_smoke):
+    """A streaming replay query removes its temp checkpoint dir once the
+    stream has stopped (each run used to leave one stream_ckpt_* dir,
+    on tmpfs where the host has one)."""
+    import glob
+    import os
+    import tempfile
+
+    from legalchatbot_vectordb_exp_spark.queries import QUERIES
+
+    root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    pattern = os.path.join(root, "stream_ckpt_*")
+    before = set(glob.glob(pattern))
+    assert QUERIES["events_streaming_live"](spark, sf_smoke).count() > 0
+    assert set(glob.glob(pattern)) - before == set()
