@@ -25,6 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from legalchatbot_vectordb_exp_spark import staging
 from legalchatbot_vectordb_exp_spark.functions.text import words
 from legalchatbot_vectordb_exp_spark.io_tables import load_table
 from legalchatbot_vectordb_exp_spark.registry import register, sql_words
@@ -272,12 +273,10 @@ def q_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reads the ORIGINAL table: round-tripping through the
     partitioned layout must preserve rows and values exactly (lang
     comes back as the partition directory's value)."""
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", "lang"
     )
-    out = tempfile.mkdtemp(prefix="part_roundtrip_")
+    out = staging.fresh(staging.scratch(sf_dir, "part_roundtrip"))
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     back = spark.read.parquet(out).filter(F.col("lang") == "en")
     return back.select(

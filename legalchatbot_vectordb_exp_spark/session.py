@@ -30,6 +30,13 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
+    # Python workers unpickle UDFs that import this package; put its
+    # parent dir on their PYTHONPATH so a driver started from any
+    # working directory (with only a driver-side sys.path entry) works
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH")) if p
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -40,6 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # events.parquet stores TIMESTAMP(NANOS) which Spark has no native
@@ -56,9 +64,13 @@ def get_spark(
         # the measured one): job-level commit is no longer all-or-
         # nothing — tasks that committed before a job abort leave
         # their files visible in the destination.  Acceptable here
-        # because every framework write is mode(overwrite) into a
-        # fresh/staging directory swapped in by the collection layer;
-        # pipelines appending into live directories should leave this
+        # because framework writes are mode(overwrite): every
+        # VectorCollection rewrite stages into a sibling directory
+        # that a journaled swap promotes, but the truncate-and-create
+        # paths (create, create_ivf, create_sparse, create_multi) and
+        # attach_sparse's new sidecar write in place, so a failed one
+        # leaves partial files that the next create overwrites.
+        # Pipelines appending into live directories should leave this
         # at v1 or use a manifest-committing table format.
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",

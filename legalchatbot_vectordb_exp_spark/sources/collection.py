@@ -41,7 +41,7 @@ from legalchatbot_vectordb_exp_spark.functions.vector import (
 
 _PROPS_FILE = "_collection.json"
 
-# merge_sparse journaled-swap protocol files (see merge_sparse /
+# journaled-swap protocol files (see _journaled_swap /
 # _apply_merge_swap / _recover_merge): the journal lives INSIDE the
 # collection directory (`_`-prefixed, so the parquet reader ignores
 # it); staging and trash are SIBLING directories, never scanned.
@@ -75,11 +75,25 @@ def _write_tasks(n_rows: int, n_parts: int) -> int:
     )
 
 
+def _part_rel(part_cols, key) -> str:
+    """Relative dir of one partition key, e.g. ``bucket=3/dslice=1``."""
+    return os.path.join(*(f"{c}={v}" for c, v in zip(part_cols, key)))
+
+
+def _data_entries(d: str) -> list[str]:
+    """Entries of ``d`` that hold table data: parquet files, partition
+    dirs and their ``.crc`` twins.  ``_``-prefixed sidecars (props,
+    journal, ``_SUCCESS``, attached sparse layouts) are not data."""
+    return sorted(
+        n for n in os.listdir(d) if not n.lstrip(".").startswith("_")
+    )
+
+
 def _no_fault(stage: str) -> None:
     """Crash-injection seam: tests monkeypatch ``_MERGE_FAULT`` to
-    raise at a precise point of the merge_sparse swap protocol and
-    then assert the collection reopens at exactly pre-merge or
-    fully-merged state.  Production: no-op."""
+    raise at a precise point of the journaled swap protocol and then
+    assert the collection reopens at exactly the pre- or the
+    post-rewrite state.  Production: no-op."""
     return
 
 
@@ -198,7 +212,8 @@ class VectorCollection:
     def upsert(self, df: DataFrame) -> "VectorCollection":
         """Last-writer-wins upsert on id (``Database.upsert``,
         ``Qdrant/VectorDB/Database.py:16-20``): anti-join existing rows
-        against incoming ids, union, rewrite.  With a Delta sink this
+        against incoming ids, union, rewrite the whole table through
+        :meth:`_journaled_swap`.  With a Delta sink this
         becomes ``MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
         INSERT`` and the rewrite disappears."""
         props = self.properties
@@ -212,30 +227,7 @@ class VectorCollection:
         merged = existing.join(
             incoming.select(id_col), on=id_col, how="left_anti"
         ).unionByName(incoming)
-        return self._staged_rewrite(merged, props)
-
-    def _staged_rewrite(
-        self, df: DataFrame, props: dict
-    ) -> "VectorCollection":
-        """Never overwrite the path still being read: stage (data AND
-        props, so staging is a complete collection), rename the live
-        dir aside, promote staging, then drop the old dir.  A crash
-        between the two renames leaves both full copies on disk —
-        recoverable — instead of the old rmtree-before-rename shape
-        that could destroy the collection outright."""
-        import shutil
-
-        staging = self.path + ".staging"
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, _PROPS_FILE), "w") as f:
-            json.dump(props, f)
-        old = self.path + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(old)
-        self._invalidate_card_cache()
+        self._journaled_swap(merged.write.mode("overwrite").parquet)
         return self
 
     # ------------------------------------------ point API (Qdrant parity)
@@ -278,7 +270,8 @@ class VectorCollection:
         survivors = self.read().filter(
             ~F.coalesce(pred, F.lit(False))
         )
-        return self._staged_rewrite(survivors, self.properties)
+        self._journaled_swap(survivors.write.mode("overwrite").parquet)
+        return self
 
     def set_payload(
         self, assignments: dict, where
@@ -314,7 +307,8 @@ class VectorCollection:
                 for c in base.columns
             ]
         )
-        return self._staged_rewrite(out, props)
+        self._journaled_swap(out.write.mode("overwrite").parquet)
+        return self
 
     # ---------------------------------------------------------------- read
 
@@ -425,12 +419,12 @@ class VectorCollection:
         new cells ∪ cells holding stale versions of incoming ids (the
         latter found by an id semi-join that reads only the id +
         partition columns) → merge those cells' rows (anti-join on id,
-        last-writer-wins) → write to a staging dir partitioned by
-        cluster_id → swap the affected partition directories in place.
-        No read-while-overwrite hazard and nothing is materialized on
+        last-writer-wins) → stage them partitioned by cluster_id → one
+        :meth:`_journaled_swap` commit swaps every affected cell in
+        (a cell the upsert emptied is dropped).  A crash reopens at
+        the pre- or post-upsert state, so a re-clustered id never sits
+        in both its old and its new cell.  Nothing is materialized on
         the driver.  With Delta this whole method is ``MERGE INTO``."""
-        import shutil
-
         props = self.properties
         if props.get("layout") != "ivf":
             raise ValueError(
@@ -464,21 +458,11 @@ class VectorCollection:
             )
         )
         merged = kept.unionByName(incoming.select(*kept.columns))
-
-        staging = self.path + ".staging"
-        merged.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            staging
+        self._journaled_swap(
+            merged.write.mode("overwrite").partitionBy("cluster_id").parquet,
+            ["cluster_id"],
+            [[cell] for cell in affected],
         )
-        for cell in affected:
-            part = f"cluster_id={cell}"
-            src = os.path.join(staging, part)
-            dst = os.path.join(self.path, part)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            if os.path.exists(src):  # a cell can end up empty after merge
-                os.rename(src, dst)
-        shutil.rmtree(staging)
-        self._invalidate_card_cache()
         return self
 
     def compact_ivf(
@@ -495,12 +479,13 @@ class VectorCollection:
         Per cluster partition holding >= ``min_files`` data files,
         rewrite the cell into ``ceil(cell_bytes / target_file_bytes)``
         files (task-level decision from directory metadata only — no
-        table scan to plan) using the same staged write + directory
-        rename swap as ``upsert_ivf``, so readers never see a partial
-        cell.  Returns ``{cells_compacted, files_before, files_after}``.
+        table scan to plan).  Every compacted cell is staged in the one
+        staging sibling and swapped in by a single
+        :meth:`_journaled_swap` commit, so a reader never sees a
+        partial cell or a cell twice.  Returns ``{cells_compacted,
+        files_before, files_after}``.
         """
         import math
-        import shutil
 
         props = self.properties
         if props.get("layout") != "ivf":
@@ -512,6 +497,7 @@ class VectorCollection:
                 if f.endswith(".parquet") and not f.startswith(("_", "."))
             ]
 
+        self._recover_merge()  # list the committed layout
         cells = []
         files_before = files_after = 0
         for part in sorted(os.listdir(self.path)):
@@ -525,7 +511,7 @@ class VectorCollection:
                 continue
             cells.append((part, pdir, files))
 
-        compacted = 0
+        compacted = []
         for part, pdir, files in cells:
             cell_bytes = sum(
                 os.path.getsize(os.path.join(pdir, f)) for f in files
@@ -534,23 +520,23 @@ class VectorCollection:
             if n_out >= len(files):  # already at/under target shape
                 files_after += len(files)
                 continue
-            staging = pdir + ".compact"
-            (
-                self.spark.read.parquet(pdir)
-                .coalesce(n_out)
-                .write.mode("overwrite")
-                .parquet(staging)
+            compacted.append((part, pdir, n_out))
+
+        def _stage(staging: str) -> None:
+            for part, pdir, n_out in compacted:
+                self.spark.read.parquet(pdir).coalesce(n_out).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(staging, part))
+
+        if compacted:
+            self._journaled_swap(
+                _stage,
+                ["cluster_id"],
+                [[part.split("=", 1)[1]] for part, _, _ in compacted],
             )
-            old = pdir + ".old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(pdir, old)
-            os.rename(staging, pdir)
-            shutil.rmtree(old)
-            files_after += len(data_files(pdir))
-            compacted += 1
+        files_after += sum(len(data_files(p)) for _, p, _ in compacted)
         return {
-            "cells_compacted": compacted,
+            "cells_compacted": len(compacted),
             "files_before": files_before,
             "files_after": files_after,
         }
@@ -954,18 +940,12 @@ class VectorCollection:
         the changed docs' own slices of each touched bucket are read
         and swapped — the common-term buckets every document shares
         stay 1/doc_slices-granular instead of all-or-nothing.  The
-        swap itself is a JOURNALED staged rename (write staging →
-        fsync journal → per-partition renames → sweep; see the inline
-        protocol comment and :meth:`_recover_merge`): a PROCESS crash
-        at any point reopens at exactly pre-merge or exactly
-        fully-merged, never a half state — the plain-parquet twin of
-        the versioned sink's staged write + manifest commit (power
-        -loss atomicity would additionally need the staged data files
-        fsync'd; see the protocol comment).  Returns
+        swap is :meth:`_journaled_swap` (write staging → fsync journal
+        → per-partition renames → sweep): a PROCESS crash at any point
+        reopens at exactly pre-merge or exactly fully-merged, never a
+        half state.  Returns
         ``{"touched_buckets": …, "touched_parts": …, "n_buckets": …}``
         so callers can pin the O(changes) claim."""
-        import shutil
-
         props = self.properties
         if props.get("layout") != "sparse":
             raise ValueError(
@@ -1130,112 +1110,117 @@ class VectorCollection:
                 f"{dupes} duplicate (id, term) postings — retire a "
                 f"doc's old postings before adding its new ones"
             )
-        # THE SWAP — staged write + journaled commit.  The r18 shape
-        # (rmtree touched partitions, then append) had a real data-loss
-        # window: between the delete and the write the merged rows
-        # lived only in this process's checkpoint blocks, so a driver
-        # crash there permanently lost every touched bucket.  Protocol
-        # now (the _staged_rewrite two-rename family, at partition
-        # granularity):
-        #   1. write the merged partitions to a STAGING sibling dir —
-        #      the live layout is untouched, a crash here reads
-        #      pre-merge;
-        #   2. fsync-and-rename a JOURNAL file inside the collection
-        #      listing the planned moves — THE commit point (the
-        #      parquet reader ignores `_`-prefixed files);
-        #   3. per touched partition: rename the live dir aside into a
-        #      TRASH sibling, rename the staged dir in — pure renames,
-        #      no data rewrite, each step idempotent;
-        #   4. remove journal, trash, staging.
-        # A crash before 2 leaves pre-merge state (stale staging is
-        # swept by the next merge); a crash after 2 is rolled FORWARD
-        # by _recover_merge() on the next read().  A reader therefore
-        # sees pre-merge or fully merged — never a half state, never
-        # lost buckets.  Guarantee scope: PROCESS crashes.  Against OS
-        # crash/power loss the journal is fsync'd but the staged
-        # parquet files are not (Spark's executor writes don't fsync),
-        # so a durable journal could promise data the page cache never
-        # flushed — full power-loss atomicity needs fsync of every
-        # staged file + parent dirs before the commit point, which is
-        # the versioned sink's manifest protocol territory, not this
-        # plain-parquet layout's.
+        # a merge that retired everything it touched stages no
+        # partition: if no parquet file survives OUTSIDE the touched
+        # partitions, the swap would leave the collection without a
+        # schema-bearing file and it becomes unreadable — stage one
+        # empty parquet file at the root instead (create_sparse's
+        # empty-layout fix, journaled with the rest of the plan)
+        touched_dirs = {
+            os.path.join(self.path, _part_rel(part_cols, k)) for k in touched
+        }
+
+        def _in_touched(root: str) -> bool:
+            # exact-dir or proper-subdir match ONLY ("bucket=1" must
+            # not swallow "bucket=12")
+            return any(
+                root == t or root.startswith(t + os.sep) for t in touched_dirs
+            )
+
+        def _stage(staging: str) -> None:
+            if n_merged:
+                # one file per touched partition (same repartition-on-
+                # part-cols rationale as create_sparse): the merged
+                # frame is O(changes), so this shuffle is change-sized;
+                # the write-task count is derived from the change size
+                # and the touched-part count, never the core count
+                # (see _write_tasks)
+                merged.repartition(
+                    _write_tasks(n_merged, len(touched)), *part_cols
+                ).write.mode("overwrite").partitionBy(*part_cols).parquet(
+                    staging
+                )
+            elif not any(
+                any(f.endswith(".parquet") for f in files)
+                for root, _, files in os.walk(self.path)
+                if not _in_touched(root)
+            ):
+                merged.write.mode("overwrite").parquet(staging)
+
+        self._journaled_swap(_stage, part_cols, touched)
+        return {
+            "touched_buckets": len({k[0] for k in touched}),
+            "touched_parts": len(touched),
+            "n_buckets": n_buckets,
+        }
+
+    def _journaled_swap(self, write, part_cols=(), keys=None) -> None:
+        """Replace data on disk: the one swap behind every rewrite
+        (``upsert``, ``delete_where``, ``set_payload``, ``upsert_ivf``,
+        ``compact_ivf``, ``merge_sparse``).  ``write(staging)`` writes
+        the new data into a staging dir.  ``keys`` lists the
+        ``part_cols`` partitions it replaces (a key with no staged dir
+        is dropped: the rewrite emptied it); ``None`` means a
+        whole-table rewrite, which retires every live data entry and
+        promotes every staged one.
+
+        Protocol (the plain-Parquet twin of the versioned sink's staged
+        write + manifest commit):
+          1. write the new data to a STAGING sibling dir — the live
+             layout is untouched, a crash here reads the pre-state;
+          2. fsync-and-rename a JOURNAL inside the collection listing
+             the planned moves — THE commit point (the parquet reader
+             ignores `_`-prefixed files);
+          3. per planned entry: rename the live entry aside into a
+             TRASH sibling, rename the staged entry in — pure renames,
+             no data rewrite, each step idempotent;
+          4. remove journal, trash, staging.
+        A crash before 2 leaves the pre-state (the next swap sweeps
+        the stale staging); a crash after 2 is rolled FORWARD by
+        :meth:`_recover_merge` on the next ``read()``.  A reader
+        therefore sees the pre-state or the post-state, never a half
+        state and never a lost partition, and no protocol dir ever
+        lives inside the collection.  Guarantee scope: PROCESS
+        crashes.  Against OS crash/power loss the journal is fsync'd
+        but the staged parquet files are not (Spark's executor writes
+        don't fsync), so a durable journal could promise data the page
+        cache never flushed — full power-loss atomicity needs fsync of
+        every staged file + parent dirs before the commit point, which
+        is the versioned sink's manifest protocol territory, not this
+        plain-parquet layout's."""
+        import shutil
+
+        # a committed swap must land before its staging is swept
+        self._recover_merge()
         staging = self.path + _MERGE_STAGING_SUFFIX
         trash = self.path + _MERGE_TRASH_SUFFIX
         for d in (staging, trash):
             if os.path.isdir(d):
-                shutil.rmtree(d)  # pre-commit leftovers of a dead merge
-        root_files: list[str] = []
-        if n_merged:
-            # one file per touched partition (same repartition-on-
-            # part-cols rationale as create_sparse): the merged frame
-            # is O(changes), so this shuffle is change-sized; the
-            # write-task count is derived from the change size and the
-            # touched-part count, never the core count (see
-            # _write_tasks)
-            merged.repartition(
-                _write_tasks(n_merged, len(touched)), *part_cols
-            ).write.mode(
-                "overwrite"
-            ).partitionBy(*part_cols).parquet(staging)
-        else:
-            os.makedirs(staging, exist_ok=True)
+                shutil.rmtree(d)  # pre-commit leftovers of a dead swap
+        write(staging)
+        os.makedirs(staging, exist_ok=True)
         _MERGE_FAULT("staged")
-
-        def _rel(key) -> str:
-            return os.path.join(
-                *(f"{c}={v}" for c, v in zip(part_cols, key))
-            )
-
-        # a touched partition the merge EMPTIED has no staged dir
-        # (partitionBy writes nothing for absent keys) — it is a pure
-        # drop, recorded separately so replaying the plan after a
-        # crash can tell "already swapped in" from "must be deleted"
-        swap_keys = [
-            list(k)
-            for k in touched
-            if os.path.isdir(os.path.join(staging, _rel(k)))
+        whole = keys is None
+        keys = [list(k) for k in keys or ()]
+        staged = [
+            k
+            for k in keys
+            if os.path.isdir(os.path.join(staging, _part_rel(part_cols, k)))
         ]
-        drop_keys = [
-            list(k)
-            for k in touched
-            if not os.path.isdir(os.path.join(staging, _rel(k)))
-        ]
-        if not n_merged:
-            # the merge retired everything it touched: if no parquet
-            # file survives OUTSIDE the touched partitions, the swap
-            # would leave the collection without a schema-bearing
-            # file and it becomes unreadable — stage one empty
-            # parquet file at the root (create_sparse's empty-layout
-            # fix, journaled with the rest of the plan)
-            touched_dirs = {
-                os.path.join(self.path, _rel(k)) for k in touched
-            }
-
-            def _in_touched(root: str) -> bool:
-                # exact-dir or proper-subdir match ONLY ("bucket=1"
-                # must not swallow "bucket=12")
-                return any(
-                    root == t or root.startswith(t + os.sep)
-                    for t in touched_dirs
-                )
-
-            any_left = any(
-                any(f.endswith(".parquet") for f in files)
-                for root, _, files in os.walk(self.path)
-                if not _in_touched(root)
-            )
-            if not any_left:
-                merged.write.mode("overwrite").parquet(staging)
-                root_files = [
-                    f
-                    for f in os.listdir(staging)
-                    if f.endswith(".parquet")
-                ]
         plan = {
-            "part_cols": part_cols,
-            "swap_keys": swap_keys,
-            "drop_keys": drop_keys,
-            "root_files": root_files,
+            "part_cols": list(part_cols),
+            "swap_keys": staged,
+            # a touched partition the rewrite EMPTIED has no staged dir
+            # (partitionBy writes nothing for absent keys) — a pure
+            # drop, recorded separately so replaying the plan after a
+            # crash can tell "already swapped in" from "must be deleted"
+            "drop_keys": [k for k in keys if k not in staged],
+            "root_files": [
+                f
+                for f in _data_entries(staging)
+                if not os.path.isdir(os.path.join(staging, f))
+            ],
+            "retire_root": _data_entries(self.path) if whole else [],
         }
         journal = os.path.join(self.path, _MERGE_JOURNAL)
         tmp = journal + ".tmp"
@@ -1245,70 +1230,67 @@ class VectorCollection:
             os.fsync(fh.fileno())
         os.rename(tmp, journal)  # commit point
         _MERGE_FAULT("committed")
+        self._finish_swap(plan)
+
+    def _finish_swap(self, plan: dict) -> None:
+        """Apply a committed plan, check that it landed, then drop the
+        journal and sweep staging and trash.  Shared by the writer
+        right after its commit and by :meth:`_recover_merge`."""
+        import shutil
+        import time
+
         self._apply_merge_swap(plan)
         # POST-CONDITION before the journal (and with it the roll-
-        # forward ability) is deleted: every swap key's live dir must
-        # exist (r19 ADVICE follow-up to the narrowed _race_ok).  A
-        # concurrent twin applier can hold a key mid-swap for a
-        # moment (live renamed aside, staged not yet renamed in), so
-        # a missing dir is re-checked briefly before it is treated as
-        # a real protocol failure.
-        import time as _time
-
-        for key in swap_keys:
-            live = os.path.join(self.path, _rel(key))
+        # forward ability) is deleted: every swapped-in entry must
+        # exist.  A concurrent twin applier can hold a key mid-swap for
+        # a moment (live renamed aside, staged not yet renamed in), so
+        # a missing entry is re-checked briefly before it is treated
+        # as a real protocol failure.
+        for rel in [
+            _part_rel(plan["part_cols"], k) for k in plan["swap_keys"]
+        ] + list(plan.get("root_files", ())):
             for _ in range(50):
-                if os.path.isdir(live):
+                if os.path.exists(os.path.join(self.path, rel)):
                     break
-                _time.sleep(0.01)
+                time.sleep(0.01)
             else:
                 raise RuntimeError(
-                    f"collection {self.name}: merge swap left "
-                    f"partition {_rel(key)} missing — journal kept "
-                    f"for roll-forward"
+                    f"collection {self.name}: swap left {rel} missing "
+                    f"— journal kept for roll-forward"
                 )
-        # a concurrent reader's _recover_merge may have replayed the
-        # committed plan and swept first — losing that race is success
+        # a concurrent twin applier may have finished and swept first
+        # — losing that race is success
         try:
-            os.remove(journal)
+            os.remove(os.path.join(self.path, _MERGE_JOURNAL))
         except FileNotFoundError:
             pass
-        for d in (staging, trash):
+        for d in (
+            self.path + _MERGE_STAGING_SUFFIX,
+            self.path + _MERGE_TRASH_SUFFIX,
+        ):
             shutil.rmtree(d, ignore_errors=True)
         self._invalidate_card_cache()
-        return {
-            "touched_buckets": len({k[0] for k in touched}),
-            "touched_parts": len(touched),
-            "n_buckets": n_buckets,
-        }
 
     def _apply_merge_swap(self, plan: dict) -> None:
-        """Execute — or RE-execute after a crash — a journaled
-        merge_sparse swap.  Idempotent by construction: a swap key
-        whose staged dir is gone was already moved in; a drop key
-        whose live dir is gone was already dropped; a root file that
-        already exists was already promoted.  Replaying a
+        """Execute — or RE-execute after a crash — a journaled swap
+        plan.  Idempotent by construction: a swap key whose staged dir
+        is gone was already moved in; a drop key or retired root entry
+        whose live copy is gone was already moved aside; a root file
+        that already exists was already promoted.  Replaying a
         half-applied plan therefore completes exactly the remaining
         moves.
 
         CONCURRENT appliers are tolerated too: a reader's
         :meth:`_recover_merge` may replay the same plan while the
-        merging process is still mid-swap (the journal exists from
+        writing process is still mid-swap (the journal exists from
         commit until sweep), so every rename races a twin performing
         the identical move.  Each step therefore treats "source
         vanished" as "the other applier did it first" — both sides
-        converge on the same final state instead of crashing a merge
+        converge on the same final state instead of crashing a swap
         that in fact committed."""
-        import shutil
-
         staging = self.path + _MERGE_STAGING_SUFFIX
         trash = self.path + _MERGE_TRASH_SUFFIX
         part_cols = plan["part_cols"]
-
-        def _rel(key) -> str:
-            return os.path.join(
-                *(f"{c}={v}" for c, v in zip(part_cols, key))
-            )
 
         def _race_ok(fn, *args) -> None:
             # the twin applier executes the SAME plan: losing a rename
@@ -1332,15 +1314,16 @@ class VectorCollection:
                 else:
                     raise
 
-        def _move_aside(live: str, key) -> None:
-            dst = os.path.join(trash, _rel(key))
+        def _move_aside(rel: str) -> None:
+            live = os.path.join(self.path, rel)
+            dst = os.path.join(trash, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.isdir(dst):
+            if os.path.exists(dst):
                 # the aside copy already landed.  In a single-applier
                 # replay this state (dst AND live both present) is
                 # unreachable — renames are atomic — so it only arises
                 # when a CONCURRENT twin finished this key's whole
-                # swap between our isdir(live) check and here, i.e.
+                # swap between our exists(live) check and here, i.e.
                 # `live` now holds the NEW data.  Leave it alone (the
                 # caller's own isdir(live) re-check then skips the
                 # stag→live rename and both appliers converge); the
@@ -1351,56 +1334,50 @@ class VectorCollection:
             _race_ok(os.rename, live, dst)
 
         for key in plan["swap_keys"]:
-            stag = os.path.join(staging, _rel(key))
-            live = os.path.join(self.path, _rel(key))
+            rel = _part_rel(part_cols, key)
+            stag = os.path.join(staging, rel)
+            live = os.path.join(self.path, rel)
             if not os.path.isdir(stag):
                 continue  # already swapped in on a previous attempt
             if os.path.isdir(live):
-                _move_aside(live, key)
+                _move_aside(rel)
             os.makedirs(os.path.dirname(live), exist_ok=True)
             if not os.path.isdir(live):
                 _race_ok(os.rename, stag, live)
             _MERGE_FAULT("swap-step")
         for key in plan["drop_keys"]:
-            live = os.path.join(self.path, _rel(key))
-            if os.path.isdir(live):
-                _move_aside(live, key)
+            rel = _part_rel(part_cols, key)
+            if os.path.isdir(os.path.join(self.path, rel)):
+                _move_aside(rel)
+            _MERGE_FAULT("drop-step")
+        for name in plan.get("retire_root", ()):
+            if os.path.lexists(os.path.join(self.path, name)):
+                _move_aside(name)
             _MERGE_FAULT("drop-step")
         for fname in plan.get("root_files", ()):
             src = os.path.join(staging, fname)
             dst = os.path.join(self.path, fname)
             if os.path.exists(src) and not os.path.exists(dst):
                 _race_ok(os.rename, src, dst)
+            _MERGE_FAULT("swap-step")
 
     def _recover_merge(self) -> None:
-        """Roll FORWARD a journaled merge_sparse swap that a crash
-        left half-applied (called from :meth:`read`, so the first
-        reader after the crash completes the merge before any scan
-        plans against the directory).  No journal = nothing committed
-        = nothing to do; stale staging/trash siblings from a
-        PRE-commit crash are harmless (outside the read path) and the
-        next merge sweeps them."""
+        """Roll FORWARD a journaled swap that a crash left
+        half-applied (called from :meth:`read`, so the first reader
+        after the crash completes the swap before any scan plans
+        against the directory).  No journal = nothing committed =
+        nothing to do; stale staging/trash siblings from a PRE-commit
+        crash are harmless (outside the read path) and the next swap
+        sweeps them."""
         journal = os.path.join(self.path, _MERGE_JOURNAL)
         if not os.path.exists(journal):
             return
-        import shutil
-
         try:
             with open(journal) as fh:
                 plan = json.load(fh)
         except FileNotFoundError:
-            return  # the merging process swept it between the checks
-        self._apply_merge_swap(plan)
-        try:
-            os.remove(journal)
-        except FileNotFoundError:
-            pass  # the twin applier finished first — same end state
-        for d in (
-            self.path + _MERGE_STAGING_SUFFIX,
-            self.path + _MERGE_TRASH_SUFFIX,
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        self._invalidate_card_cache()
+            return  # the writing process swept it between the checks
+        self._finish_swap(plan)
 
     def search_sparse(self, query: dict, k: int = 10) -> DataFrame:
         """Sparse-vector search (Qdrant sparse dot product):

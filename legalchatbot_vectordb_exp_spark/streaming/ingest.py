@@ -165,7 +165,8 @@ def stage_changes_feed(
     collection,
     from_version: int,
     to_version: int | None = None,
-    staging_dir: str | None = None,
+    *,
+    staging_dir: str,
     preimages: bool = True,
 ) -> str:
     """Materialize a ``VersionedCollection`` change feed as a
@@ -186,15 +187,12 @@ def stage_changes_feed(
     import glob as _glob
     import os
     import shutil
-    import tempfile
     import time as _time
 
     import pyspark.sql.functions as _F
 
     if to_version is None:
         to_version = collection.latest_version()
-    if staging_dir is None:
-        staging_dir = tempfile.mkdtemp(prefix="cdf_stage_")
     os.makedirs(staging_dir, exist_ok=True)
     base_t = _time.time() - 3600  # recent enough for maxFileAge
 

@@ -144,3 +144,18 @@ def test_second_call_persists_nothing_new(spark, sf_smoke, name):
     run()
     assert jsc.getPersistentRDDs().size() == persisted
     assert _log_names(since) == []
+
+
+def test_partitioned_roundtrip_leaves_no_temp_dir(spark, sf_smoke):
+    """``partitioned_roundtrip`` writes its layout to one fresh scratch
+    path, so repeated runs add no ``part_roundtrip_*`` dir to the temp
+    dir (each run used to leave one behind)."""
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "part_roundtrip_*")
+    before = len(glob.glob(pattern))
+    for _ in range(2):
+        assert QUERIES["partitioned_roundtrip"](spark, sf_smoke).count() > 0
+    assert len(glob.glob(pattern)) == before
