@@ -185,8 +185,8 @@ def _local_writable(schema: StructType) -> bool:
 class _LocalRows:
     """A commit payload already materialized on the driver: a list of
     row-dict chunks (one output file per non-empty chunk) plus the
-    schema to write them under.  ``_commit`` writes these with pyarrow
-    instead of launching a Spark write job."""
+    schema to write them under.  ``_write_payload`` writes these with
+    pyarrow instead of launching a Spark write job."""
 
     __slots__ = ("chunks", "schema")
 
@@ -1292,38 +1292,21 @@ class VersionedCollection:
         operation: str,
         carried: list[str],
         schema: StructType,
-        carried_stats: dict | None = None,
         id_col: str | None = None,
-        stat_cols: list[str] | None = None,
-        carried_col_stats: dict | None = None,
-        parent_manifest: dict | None = None,
-        dv: dict | None = None,
-        dv_add: dict | None = None,
     ) -> None:
-        """Write-then-publish.  On a lost publish race the freshly
-        written data subdir is swept best-effort before re-raising, so
-        retry loops don't strew orphans (vacuum's age guard covers any
+        """Write-then-publish with no rebase (``create``; every later
+        data commit goes through :meth:`_commit_payload`).  On a lost
+        publish race the freshly written data subdir is swept
+        best-effort before re-raising (vacuum's age guard covers any
         sweep that itself fails)."""
-        pm = parent_manifest
-        if pm is None and parent is not None:
-            pm = self.manifest(parent)
+        pm = self.manifest(parent) if parent is not None else None
         mapping, _ = self._commit_mapping(pm, schema)
         payload = self._write_payload(
-            df, version, id_col, stat_cols, mapping=mapping or None
+            df, version, id_col, mapping=mapping or None
         )
         try:
             self._publish_payload(
-                payload,
-                version,
-                parent,
-                operation,
-                carried,
-                schema,
-                carried_stats,
-                carried_col_stats,
-                pm,
-                dv=dv,
-                dv_add=dv_add,
+                payload, version, parent, operation, carried, schema, pm
             )
         except ConcurrentWriteError:
             if payload[0] is not None:
@@ -1338,36 +1321,29 @@ class VersionedCollection:
         operation: str,
         carried: list[str],
         schema: StructType,
-        carried_stats: dict | None = None,
-        carried_col_stats: dict | None = None,
-        parent_manifest: dict | None = None,
-        dv: dict | None = None,
+        pm: dict | None,
         dv_add: dict | None = None,
-        column_mapping: dict | None = None,
-        retired_columns: list | None = None,
-    ) -> None:
+    ) -> dict:
         """The manifest half of a commit: build the (delta or full)
-        manifest for an already-written payload and publish it
-        atomically.  Raises ``ConcurrentWriteError`` on a lost race
+        manifest for an already-written payload on top of the parent
+        manifest ``pm`` (``None`` for version 0), publish it atomically
+        and return it.  Raises ``ConcurrentWriteError`` on a lost race
         WITHOUT touching the payload files — the caller decides
         between sweep-and-rerun and rebase-and-republish.
 
-        ``column_mapping``/``retired_columns`` are stamped explicitly
-        by the rename/drop DDL commits (and restore); data commits
-        leave them ``None`` and inherit the parent's via
-        ``_commit_mapping`` — every manifest of a mapped table carries
-        the full (tiny) map, so snapshot resolution never walks the
-        chain for it.
-
-        ``dv`` is the commit's RESOLVED deletion-vector map
-        ``{dv_rel: [covered data files]}``; when ``None`` it derives
-        from the parent by pruning covers to the carried set (files
-        that leave the snapshot take their DV association with them —
-        any rewrite mints new paths, so a stale DV row can never match
-        rewritten data).  Every manifest carries its full (usually
-        tiny) ``dv`` map, delta-encoded commits included, so snapshot
-        resolution never walks the chain for it; ``dv_add`` records
-        THIS commit's additions for the conflict checker."""
+        Everything a carried file brings along derives from the
+        parent: its id stats and Z-order ``col_stats``, the column
+        mapping (via ``_commit_mapping`` — every manifest of a mapped
+        table carries the full, tiny map, so snapshot resolution never
+        walks the chain for it) and its deletion-vector covers.  The
+        ``dv`` map ``{dv_rel: [covered data files]}`` is the parent's
+        with covers pruned to the carried set (files that leave the
+        snapshot take their DV association with them — any rewrite
+        mints new paths, so a stale DV row can never match rewritten
+        data), plus ``dv_add``, THIS commit's new sidecars (also
+        recorded for the conflict checker).  Every manifest carries
+        its full (usually tiny) ``dv`` map, delta-encoded commits
+        included."""
         _out_dir, new_files, new_stats, new_col_stats = payload
         manifest = {
             "version": version,
@@ -1378,71 +1354,31 @@ class VersionedCollection:
             "n_written": len(new_files),
             "schema": schema.json(),
         }
-        # resolve the parent manifest AT MOST ONCE per commit — the
-        # resolution is an O(table-files) delta-chain fold, and every
-        # mutating caller already holds it (threaded via
-        # parent_manifest); only legacy/callers without it pay a read
-        pm = parent_manifest
-
-        def _parent_manifest() -> dict:
-            nonlocal pm
-            if pm is None:
-                pm = self.manifest(parent)
-            return pm
-
+        cset = set(carried)
         # Delta-encode when the touch set is smaller than the table
         # (manifest bytes ∝ touch set); periodically force a full
         # manifest to cap the resolution chain.  Full manifests are
         # stamped format_version 1 (v1 readers can read them), deltas
         # 2 (they cannot).
         remove: list[str] | None = None
-        if parent is not None and (
-            version % self.full_manifest_interval != 0
-        ):
-            parent_files = _parent_manifest()["files"]
-            carried_set = set(carried)
-            remove = [f for f in parent_files if f not in carried_set]
-        is_delta = remove is not None and len(remove) < len(carried)
-        if dv is None:
-            dv = {}
-            if parent is not None:
-                pdv = _parent_manifest().get("dv") or {}
-                if pdv:
-                    cset = set(carried)
-                    for r, cov in pdv.items():
-                        kept = [f for f in cov if f in cset]
-                        if kept:
-                            dv[r] = kept
+        if pm is not None and version % self.full_manifest_interval != 0:
+            remove = [f for f in pm["files"] if f not in cset]
+        dv = {}
+        for r, cov in ((pm or {}).get("dv") or {}).items():
+            kept = [f for f in cov if f in cset]
+            if kept:
+                dv[r] = kept
+        dv |= dv_add or {}
         if dv:
             manifest["dv"] = dv
         if dv_add:
             manifest["dv_add"] = dv_add
-        if column_mapping is None and parent is not None:
-            column_mapping, retired_columns = self._commit_mapping(
-                _parent_manifest(), schema
-            )
-        if column_mapping:
-            manifest["column_mapping"] = column_mapping
-        if retired_columns:
-            manifest["retired_columns"] = retired_columns
-        # carried files keep their Z-order column stats without every
-        # caller having to thread them through — only materialized on
-        # the full-manifest branch (a delta carries stats implicitly)
-        if (
-            carried_col_stats is None
-            and parent is not None
-            and carried
-            and not is_delta
-        ):
-            cset = set(carried)
-            carried_col_stats = {
-                f: s
-                for f, s in _parent_manifest()
-                .get("col_stats", {})
-                .items()
-                if f in cset
-            }
-        if is_delta:
+        mapping, retired = self._commit_mapping(pm, schema)
+        if mapping:
+            manifest["column_mapping"] = mapping
+        if retired:
+            manifest["retired_columns"] = retired
+        if remove is not None and len(remove) < len(carried):
             manifest |= {
                 "format_version": 2,
                 "base": parent,
@@ -1452,16 +1388,24 @@ class VersionedCollection:
                 "add_col_stats": new_col_stats,
             }
         else:
+            # a full manifest materializes the carried files' stats
+            # (a delta carries them implicitly through its base)
+            pstats = (pm or {}).get("stats", {})
+            pcol = (pm or {}).get("col_stats", {})
             manifest |= {
                 "format_version": 1,
                 "files": carried + new_files,
-                "stats": {**(carried_stats or {}), **new_stats},
+                "stats": {
+                    **{f: pstats[f] for f in carried if f in pstats},
+                    **new_stats,
+                },
                 "col_stats": {
-                    **(carried_col_stats or {}),
+                    **{f: pcol[f] for f in carried if f in pcol},
                     **new_col_stats,
                 },
             }
         self._publish(manifest)
+        return manifest
 
     # ----------------------------------------------- conflict detection
 
@@ -1569,111 +1513,43 @@ class VersionedCollection:
                     return None
         return latest
 
-    def _publish_merge(
+    def _publish_rebasing(
         self,
         payload: tuple[str | None, list[str], dict, dict],
         base: int,
         base_manifest: dict,
-        matched_files: set[str],
-        out_schema: StructType,
+        schema: StructType,
         operation: str,
-        key_bounds: tuple | None,
-    ) -> tuple[int, int]:
-        """Publish an already-written merge payload at ``base + 1``;
-        on a lost publish race, REBASE onto the winner without
-        rerunning the data job when ``_conflict_free_base`` proves the
-        race window disjoint (carried set, stats and col_stats are
-        recomputed from the winner's snapshot; the payload files are
-        reused as-is).  Returns ``(version, rebases)``.  When a window
-        commit actually conflicts, sweeps the payload and re-raises
-        ``ConcurrentWriteError`` so the caller re-plans from scratch —
-        exactly one data job either way."""
-        base_schema_json = base_manifest["schema"]
+        key_bounds,
+        removed: set[str] = frozenset(),
+        dv_add: dict | None = None,
+    ) -> tuple[dict, int]:
+        """The one publisher of every data commit after ``create``:
+        publish an already-written ``payload`` at ``base + 1``,
+        replacing the ``removed`` files (a copy-on-write rewrite's
+        matched files; none for merge-on-read) and adding the
+        ``dv_add`` sidecars ``{dv_rel: [covered files]}`` (none for
+        copy-on-write).  The carried set, stats and ``dv`` map derive
+        from each parent.  On a lost publish race it REBASES onto the
+        winner without rerunning any data job when
+        ``_conflict_free_base`` proves the race window disjoint from
+        the touched (removed or DV-covered) files and ``key_bounds``;
+        on a real conflict it sweeps the payload and re-raises
+        ``ConcurrentWriteError`` (the caller owns any sidecar sweep
+        and the re-plan).  Returns ``(published manifest, rebases)``."""
+        touched = set(removed).union(*(dv_add or {}).values())
         parent, pm = base, base_manifest
         rebases = 0
         while True:
-            carried = [
-                f for f in pm["files"] if f not in matched_files
-            ]
-            pstats = pm.get("stats", {})
-            carried_stats = {
-                f: pstats[f] for f in carried if f in pstats
-            }
+            carried = [f for f in pm["files"] if f not in removed]
             try:
-                self._publish_payload(
-                    payload,
-                    parent + 1,
-                    parent,
-                    operation,
-                    carried,
-                    out_schema,
-                    carried_stats=carried_stats,
-                    parent_manifest=pm,
-                )
-                return parent + 1, rebases
+                return self._publish_payload(
+                    payload, parent + 1, parent, operation, carried,
+                    schema, pm, dv_add,
+                ), rebases
             except ConcurrentWriteError:
                 nb = self._conflict_free_base(
-                    parent, matched_files, key_bounds, base_schema_json
-                )
-                if nb is None:
-                    if payload[0] is not None:
-                        shutil.rmtree(payload[0], ignore_errors=True)
-                    raise
-                rebases += 1
-                parent, pm = nb, self.manifest(nb)
-
-    def _publish_mor(
-        self,
-        payload: tuple[str | None, list[str], dict, dict],
-        base: int,
-        base_manifest: dict,
-        covered: list[str],
-        dv_rels: list[str],
-        operation: str,
-        key_bounds: tuple | None,
-    ) -> tuple[int, int]:
-        """Publish a merge-on-read commit — a deletion-vector sidecar
-        over ``covered`` files plus an optional appended ``payload``
-        (MOR update) — at ``base + 1``; on a lost publish race, REBASE
-        onto the winner without rerunning the matching scan or the
-        append job when ``_conflict_free_base`` proves the window
-        disjoint from our ``covered`` set (no window commit rewrote or
-        DV'd a covered file, no added file's id range intersects
-        ``key_bounds``).  The sidecar and appended files are reused
-        verbatim; only the manifest's ``dv`` map is recomputed from
-        each new parent.  Returns ``(version, rebases)``; a real
-        conflict sweeps the appended payload (the caller owns the
-        sidecar sweep) and re-raises for a full re-plan."""
-        base_schema_json = base_manifest["schema"]
-        schema = StructType.fromJson(json.loads(base_schema_json))
-        touched = set(covered)
-        parent, pm = base, base_manifest
-        rebases = 0
-        while True:
-            dv_next = {
-                r: list(cov) for r, cov in (pm.get("dv") or {}).items()
-            }
-            for r in dv_rels:
-                dv_next[r] = list(covered)
-            dv_add = {r: list(covered) for r in dv_rels}
-            try:
-                self._publish_payload(
-                    payload,
-                    parent + 1,
-                    parent,
-                    operation,
-                    carried=list(pm["files"]),
-                    schema=schema,
-                    carried_stats=dict(pm.get("stats", {})),
-                    carried_col_stats=dict(pm.get("col_stats", {})),
-                    parent_manifest=pm,
-                    dv=dv_next or None,
-                    dv_add=dv_add or None,
-                )
-                return parent + 1, rebases
-            except ConcurrentWriteError:
-                nb = self._conflict_free_base(
-                    parent, touched, key_bounds, base_schema_json
+                    parent, touched, key_bounds, base_manifest["schema"]
                 )
                 if nb is None:
                     if payload[0] is not None:
@@ -2009,12 +1885,22 @@ class VersionedCollection:
             os.path.realpath(p), os.path.realpath(self.path)
         )
 
-
-    def _fits_local_rewrite(self, files: list[str]) -> bool:
-        """Byte-size half of the fused-commit gate, shared by merge /
-        delete_where / recluster (each checks its own file-count and
-        schema-writability first).  An unreadable size (racing vacuum
-        or compact) routes to the distributed path — never fused."""
+    def _fits_local_rewrite(
+        self, files: list[str], schema: StructType, m: dict | None = None
+    ) -> bool:
+        """The fused-commit gate shared by merge / delete_where /
+        recluster: at most ``_LOCAL_REWRITE_MAX_FILES`` files of at
+        most ``_LOCAL_REWRITE_MAX_BYTES`` in total, a ``schema`` the
+        driver-side writer round-trips, and — when the snapshot ``m``
+        is given, because :meth:`_rewrite_local` reads raw files —
+        no outstanding deletion vector.  An unreadable size (racing
+        vacuum or compact) routes to the distributed path."""
+        if (
+            len(files) > _LOCAL_REWRITE_MAX_FILES
+            or not _local_writable(schema)
+            or (m is not None and m.get("dv"))
+        ):
+            return False
         try:
             total = sum(
                 os.path.getsize(os.path.join(self.path, f))
@@ -2024,41 +1910,81 @@ class VersionedCollection:
             return False
         return total <= _LOCAL_REWRITE_MAX_BYTES
 
-    def _collect_tagged(
+    def _rewrite_local(
         self,
         files: list[str],
+        m: dict,
         schema: StructType,
-        extra: dict | None = None,
-        m: dict | None = None,
-    ) -> list[dict]:
-        """One bounded collect of the candidate files with every row
-        tagged by its collection-relative source file (``_vc_rel``)
-        plus any extra derived columns — the shared front half of the
-        fused merge and delete rewrites.  ``m`` (the snapshot
-        manifest) applies the column mapping when present."""
-        if not files:
-            return []
-        df = (
-            self._read_files(files, m, schema)
-            if m is not None
-            else self.spark.read.schema(schema).parquet(
-                *(os.path.join(self.path, f) for f in files)
+        hit,
+        out_schema: StructType,
+        inserts: list[dict] = (),
+    ) -> tuple[set[str], _LocalRows | None]:
+        """Fused-local copy-on-write body shared by merge and
+        delete_where: ONE bounded collect of ``files`` tags every row
+        with its source file and with ``hit`` (the merge-key match or
+        the delete predicate — still Spark SQL), so the probe and the
+        rewrite need no further job.  The files holding a hit row are
+        the matched set; their other rows plus ``inserts`` become the
+        driver-written payload, one chunk per matched file.  Returns
+        ``(matched_files, payload)`` with a ``None`` payload when
+        there is nothing to write."""
+        tagged = []
+        if files:
+            rels: dict[str, str] = {}
+            df = (
+                self._read_files(files, m, schema)
+                .withColumn("_vc_hit", hit)
+                .withColumn("_vc_file", F.input_file_name())
             )
+            for r in df.collect():
+                d = r.asDict()
+                uri = d.pop("_vc_file")
+                if uri not in rels:
+                    rels[uri] = self._rel_of_uri(uri)
+                tagged.append((rels[uri], d.pop("_vc_hit"), d))
+        matched = {rel for rel, h, _ in tagged if h}
+        if not matched and not inserts:
+            return matched, None
+        names = out_schema.fieldNames()
+        rows = [
+            {n: d.get(n) for n in names}
+            for rel, h, d in tagged
+            if rel in matched and not h
+        ] + [{n: d.get(n) for n in names} for d in inserts]
+        return matched, _LocalRows(
+            _split_chunks(rows, max(1, len(matched))), out_schema
         )
-        for name, col in (extra or {}).items():
-            df = df.withColumn(name, col)
-        df = df.withColumn("_vc_file", F.input_file_name())
-        rel_cache: dict[str, str] = {}
-        rows: list[dict] = []
-        for r in df.collect():
-            d = r.asDict()
-            uri = d.pop("_vc_file")
-            rel = rel_cache.get(uri)
-            if rel is None:
-                rel = rel_cache[uri] = self._rel_of_uri(uri)
-            d["_vc_rel"] = rel
-            rows.append(d)
-        return rows
+
+    def _rewrite_frame(
+        self,
+        matched: set[str],
+        m: dict,
+        schema: StructType,
+        keep,
+        add: DataFrame | None = None,
+    ) -> DataFrame | None:
+        """Distributed copy-on-write tail shared by merge, delete_where
+        and update_where: the matched files read with their deletion
+        vectors applied, passed through ``keep`` (survivor filter or
+        SET projection), plus the ``add`` rows, coalesced to one
+        output file per rewritten input (without it, survivors' and
+        inserts' partitions each emit a file and every merge
+        multiplies small files).  ``None`` when there is nothing to
+        write — the commit is then a no-op version (Delta history
+        parity)."""
+        if not matched and add is None:
+            return None
+        rewr = (
+            self._apply_dv(
+                self._read_files(sorted(matched), m, schema), m, schema
+            )
+            if matched
+            else self.spark.createDataFrame([], schema)
+        )
+        out = keep(rewr)
+        if add is not None:
+            out = out.unionByName(add, allowMissingColumns=True)
+        return out.coalesce(max(1, len(matched)))
 
     # -------------------------------------------------------- commit path
 
@@ -2110,50 +2036,36 @@ class VersionedCollection:
         )
         return self
 
-    def _commit_cow(
+    def _commit_payload(
         self,
-        stats_attr: str,
-        attempt: int,
         base: int,
         m: dict,
-        candidates: list[str],
-        pruned: int,
-        matched_files: set[str],
         src: DataFrame | _LocalRows | None,
-        out_schema: StructType,
+        schema: StructType,
         operation: str,
-        key_bounds,
-    ) -> "VersionedCollection":
-        """Copy-on-write tail: write ``src`` (the rewritten survivors
-        plus any inserted rows; ``None`` commits a no-op version) as
-        the payload of ``base + 1``, publish it replacing
-        ``matched_files`` through :meth:`_publish_merge` (rebase on a
-        disjoint race, sweep and raise on a real conflict) and record
-        the stats."""
+        key_bounds=None,
+        removed: set[str] = frozenset(),
+        dv_add: dict | None = None,
+        stat_cols: list[str] | None = None,
+        expected_ndv: int | None = None,
+    ) -> tuple[dict, int]:
+        """The tail of every data commit after ``create``: write
+        ``src`` (``None`` writes nothing) as the payload of
+        ``base + 1`` under the parent's column mapping, recording the
+        parent's Z-order stat columns unless ``stat_cols`` names
+        others, then publish it through :meth:`_publish_rebasing`.
+        Returns ``(published manifest, rebases)``."""
         payload = self._write_payload(
             src,
             base + 1,
             self.properties["id_col"],
-            stat_cols=_manifest_stat_cols(m),
-            mapping=self._commit_mapping(m, out_schema)[0] or None,
+            stat_cols=stat_cols or _manifest_stat_cols(m),
+            mapping=self._commit_mapping(m, schema)[0] or None,
+            expected_ndv=expected_ndv,
         )
-        _v, rebases = self._publish_merge(
-            payload,
-            base,
-            m,
-            matched_files,
-            out_schema,
-            operation,
-            key_bounds,
-        )
-        return self._record_stats(
-            stats_attr,
-            m,
-            candidates,
-            pruned,
-            len(matched_files),
-            attempt,
-            rebases,
+        return self._publish_rebasing(
+            payload, base, m, schema, operation, key_bounds, removed,
+            dv_add,
         )
 
     def _commit_mor(
@@ -2174,12 +2086,12 @@ class VersionedCollection:
         """Merge-on-read tail.  Writes the deletion-vector sidecar —
         the ``(file, id)`` pairs of the candidate rows that
         ``match(frame)`` keeps, after the outstanding DVs are applied
-        — then the appended payload ``append(covered, dv_rels)``
-        (``None`` appends nothing), publishes both through
-        :meth:`_publish_mor`, records the stats and runs the DV budget
-        check.  A sidecar that covers nothing is dropped before
-        publish (the commit is then a no-op version), and the sidecar
-        is swept on ANY failure before the publish lands."""
+        — then commits the appended payload ``append(covered,
+        dv_rels)`` (``None`` appends nothing) with the sidecar as its
+        ``dv_add``, records the stats and runs the DV budget check.  A
+        sidecar that covers nothing is dropped before publish (the
+        commit is then a no-op version), and the sidecar is swept on
+        ANY failure before the publish lands."""
         id_col = self.properties["id_col"]
         out: str | None = None
         dv_rels: list[str] = []
@@ -2226,16 +2138,15 @@ class VersionedCollection:
                 if not covered:
                     shutil.rmtree(out, ignore_errors=True)
                     out, dv_rels = None, []
-            payload = self._write_payload(
+            _pub, rebases = self._commit_payload(
+                base,
+                m,
                 append(covered, dv_rels),
-                base + 1,
-                id_col,
-                stat_cols=_manifest_stat_cols(m),
-                mapping=self._commit_mapping(m, schema)[0] or None,
+                schema,
+                operation,
+                key_bounds,
+                dv_add={r: list(covered) for r in dv_rels},
                 expected_ndv=expected_ndv,
-            )
-            _v, rebases = self._publish_mor(
-                payload, base, m, covered, dv_rels, operation, key_bounds
             )
         except Exception:
             if out is not None:
@@ -2474,42 +2385,19 @@ class VersionedCollection:
                 ).first()
                 key_bounds = (kb["lo"], kb["hi"])
                 n_keys = kb["n"]
-            key_lo, key_hi = key_bounds or (None, None)
-            use_bcast = n_keys is None or n_keys <= _BROADCAST_KEY_LIMIT
-            kdf = F.broadcast(keys) if use_bcast else keys
-            candidates = []
-            pruned = 0
-            for f in m["files"]:
-                mm = stats.get(f)
-                if (
-                    mm is not None
-                    and key_lo is not None
-                    and (mm[1] < key_lo or mm[0] > key_hi)
-                ):
-                    pruned += 1
-                else:
-                    candidates.append(f)
+            candidates, pruned = _stats_candidates(
+                m["files"], stats, key_bounds
+            )
 
             # Fused local path — when the key set is small AND the
-            # candidate files are tiny (sum of sizes under
-            # _LOCAL_REWRITE_MAX_BYTES), ONE bounded collect replaces
-            # the probe job + rewrite job: matched files, survivors
-            # and the output chunks are all computed in Python and the
-            # new files written driver-side.  Never fires at
-            # production file sizes; preserves last_merge_stats
-            # semantics exactly.
-            can_fuse = (
+            # candidate files are tiny, ONE bounded collect replaces
+            # the probe job + rewrite job.  Normalized-cosine updates
+            # need the JVM l2_normalize on incoming rows (bit-identical
+            # scaling); a source missing table columns must keep the
+            # Spark path so it raises the same AnalysisException
+            # select() would.
+            if (
                 key_list is not None
-                and len(candidates) <= _LOCAL_REWRITE_MAX_FILES
-                and _local_writable(out_schema)
-                # outstanding deletion vectors: the distributed path
-                # applies them to the survivors read; the local
-                # collect does not — correctness gate, not a size one
-                and not m.get("dv")
-                # normalized-cosine updates need the JVM l2_normalize
-                # on incoming rows (bit-identical scaling); a source
-                # missing table columns must keep the Spark path so it
-                # raises the same AnalysisException select() would
                 and not (
                     when_matched == "update"
                     and props["metric"] == "cosine"
@@ -2520,33 +2408,17 @@ class VersionedCollection:
                     and not schema_evolution
                     and set(schema.fieldNames()) - set(incoming.columns)
                 )
-            )
-            if can_fuse:
-                can_fuse = self._fits_local_rewrite(candidates)
-            if can_fuse:
-                _k = lambda v: bytes(v) if isinstance(v, bytearray) else v
-                keyset = {_k(k) for k in key_list}
-                crows = self._collect_tagged(candidates, schema, m=m)
-                matched_files = {
-                    d["_vc_rel"]
-                    for d in crows
-                    if _k(d[id_col]) in keyset
-                }
-                out_names = out_schema.fieldNames()
-                out_rows = [
-                    {n: d.get(n) for n in out_names}
-                    for d in crows
-                    if d["_vc_rel"] in matched_files
-                    and _k(d[id_col]) not in keyset
-                ]
-                if when_matched == "update":
-                    out_rows += [
-                        {n: d.get(n) for n in out_names}
-                        for d in (r.asDict() for r in small)
-                    ]
-                out = _LocalRows(
-                    _split_chunks(out_rows, max(1, len(matched_files))),
+                and self._fits_local_rewrite(candidates, out_schema, m)
+            ):
+                matched_files, out = self._rewrite_local(
+                    candidates,
+                    m,
+                    schema,
+                    F.col(id_col).isin(key_list),
                     out_schema,
+                    [r.asDict() for r in small]
+                    if when_matched == "update"
+                    else [],
                 )
             else:
                 # tier 2 — id column + file name only on the candidates
@@ -2556,6 +2428,8 @@ class VersionedCollection:
                 # skips row groups by column stats AND the write-time
                 # bloom filter — effective even on hash layouts where
                 # manifest min/max ranges overlap every file.
+                use_bcast = n_keys is None or n_keys <= _BROADCAST_KEY_LIMIT
+                kdf = F.broadcast(keys) if use_bcast else keys
                 matched_files = set()
                 if candidates:
                     if (
@@ -2583,52 +2457,31 @@ class VersionedCollection:
                     matched_files = {
                         self._rel_of_uri(r[0]) for r in hit_rows
                     }
-                if matched_files:
-                    rewr = self._apply_dv(
-                        self._read_files(sorted(matched_files), m, schema),
-                        m,
-                        schema,
-                    )
-                    # small key sets: a literal NOT IN survives as a
-                    # scan-stage filter (no broadcast build job, no
-                    # join); large: anti-join against the key frame
-                    if key_list is not None:
-                        survivors = rewr.filter(
-                            ~F.col(id_col).isin(key_list)
-                        )
-                    else:
-                        survivors = rewr.join(kdf, id_col, "left_anti")
+                if when_matched == "delete":
+                    inserts = None
+                elif schema_evolution:
+                    inserts = incoming
                 else:
-                    survivors = self.spark.createDataFrame([], schema)
-                if when_matched == "update":
-                    if schema_evolution:
-                        out = survivors.unionByName(
-                            incoming, allowMissingColumns=True
-                        ).select(*out_schema.fieldNames())
-                    else:
-                        out = survivors.unionByName(
-                            incoming.select(*schema.fieldNames())
-                        )
-                else:
-                    out = survivors
-                # bound output file count to the rewritten-input count:
-                # without this, survivors' partitions + incoming's
-                # partitions each emit a file and every merge
-                # multiplies small files (measured: 8 rewritten -> 18
-                # written)
-                out = out.coalesce(max(1, len(matched_files)))
-            return self._commit_cow(
-                "last_merge_stats",
-                attempt,
-                base,
-                m,
-                candidates,
-                pruned,
-                matched_files,
-                out,
-                out_schema,
-                f"merge:{when_matched}",
-                key_bounds,
+                    inserts = incoming.select(*schema.fieldNames())
+                # small key sets: a literal NOT IN survives as a
+                # scan-stage filter (no broadcast build job, no join);
+                # large: anti-join against the key frame
+                out = self._rewrite_frame(
+                    matched_files,
+                    m,
+                    schema,
+                    (lambda df: df.filter(~F.col(id_col).isin(key_list)))
+                    if key_list is not None
+                    else (lambda df: df.join(kdf, id_col, "left_anti")),
+                    inserts,
+                )
+            _pub, rebases = self._commit_payload(
+                base, m, out, out_schema, f"merge:{when_matched}", key_bounds,
+                removed=matched_files,
+            )
+            return self._record_stats(
+                "last_merge_stats", m, candidates, pruned, len(matched_files),
+                attempt, rebases,
             )
 
         return self._retry(max_retries, attempt_fn)
@@ -2787,69 +2640,27 @@ class VersionedCollection:
                     bmap,
                 )
             # Fused local path — tiny tables: ONE collect evaluates
-            # the predicate (still Spark SQL — arbitrary expressions)
-            # and tags each row with its file; matched files,
-            # survivors and the rewrite all happen driver-side, so the
-            # whole DELETE is one job instead of three.
-            can_fuse = (
-                0 < len(candidates) <= _LOCAL_REWRITE_MAX_FILES
-                and _local_writable(schema)
-                # outstanding DVs take the distributed path, which
-                # applies them to the rewrite read
-                and not m.get("dv")
-            )
-            if can_fuse:
-                can_fuse = self._fits_local_rewrite(candidates)
-            # nothing to delete — still commit a no-op version so the
-            # operation is visible in history (Delta parity)
-            survivors = None
-            if can_fuse:
-                crows = self._collect_tagged(
-                    candidates, schema, extra={"_vc_hit": hit}, m=m
+            # the predicate and tags each row with its file, so the
+            # whole DELETE is one job instead of three.  Nothing to
+            # delete still commits a no-op version (Delta parity).
+            if self._fits_local_rewrite(candidates, schema, m):
+                matched_files, survivors = self._rewrite_local(
+                    candidates, m, schema, hit, schema
                 )
-                matched_files = {
-                    d["_vc_rel"] for d in crows if d["_vc_hit"]
-                }
-                if matched_files:
-                    names = schema.fieldNames()
-                    out_rows = [
-                        {n: d.get(n) for n in names}
-                        for d in crows
-                        if d["_vc_rel"] in matched_files
-                        and not d["_vc_hit"]
-                    ]
-                    survivors = _LocalRows(
-                        _split_chunks(out_rows, len(matched_files)),
-                        schema,
-                    )
             else:
                 matched_files = self._files_matching(
                     candidates, m, schema, pred
                 )
-                if matched_files:
-                    survivors = (
-                        self._apply_dv(
-                            self._read_files(
-                                sorted(matched_files), m, schema
-                            ),
-                            m,
-                            schema,
-                        )
-                        .filter(~hit)
-                        .coalesce(len(matched_files))
-                    )
-            return self._commit_cow(
-                "last_delete_stats",
-                attempt,
-                base,
-                m,
-                candidates,
-                pruned,
-                matched_files,
-                survivors,
-                schema,
-                "delete_where",
-                bmap,
+                survivors = self._rewrite_frame(
+                    matched_files, m, schema, lambda df: df.filter(~hit)
+                )
+            _pub, rebases = self._commit_payload(
+                base, m, survivors, schema, "delete_where", bmap,
+                removed=matched_files,
+            )
+            return self._record_stats(
+                "last_delete_stats", m, candidates, pruned, len(matched_files),
+                attempt, rebases,
             )
 
         return self._retry(max_retries, attempt_fn)
@@ -2890,7 +2701,6 @@ class VersionedCollection:
         after a long MOR delete/update run.  Cost is O(covered
         bytes): uncovered files carry by reference, never a table
         rescan.  (Delta calls this REORG TABLE ... APPLY (PURGE).)"""
-        id_col = self.properties.get("id_col")
 
         def attempt_fn(attempt, base, m, schema):
             dv = m.get("dv") or {}
@@ -2901,30 +2711,24 @@ class VersionedCollection:
                     "version": base,
                 }
             covered = sorted({f for cov in dv.values() for f in cov})
-            cset = set(covered)
-            stats = m.get("stats", {})
-            carried = [f for f in m["files"] if f not in cset]
-            self._commit(
+            # every cover departs with its file, so the published dv
+            # map keeps only sidecars a rebase picked up
+            pub, _ = self._commit_payload(
+                base,
+                m,
                 self._apply_dv(
                     self._read_files(covered, m, schema), m, schema
                 ).coalesce(len(covered)),
-                base + 1,
-                base,
-                "materialize_dvs",
-                carried,
                 schema,
-                carried_stats={f: stats[f] for f in carried if f in stats},
-                id_col=id_col,
-                stat_cols=_manifest_stat_cols(m),
-                parent_manifest=m,
-                dv={},  # every cover departs with its file
+                "materialize_dvs",
+                removed=set(covered),
             )
             # sidecar parquet files are now unreferenced; vacuum
             # retires them once their manifests age out
             return {
                 "rewritten": len(covered),
                 "dv_dropped": len(dv),
-                "version": base + 1,
+                "version": pub["version"],
                 "retries": attempt,
             }
 
@@ -3543,6 +3347,7 @@ class VersionedCollection:
         id_col = self.properties["id_col"]
         bmap = _predicate_col_bounds(predicate)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        hit = F.coalesce(pred, F.lit(False))
 
         def attempt_fn(attempt, base, m, schema):
             setx = self._resolve_set_exprs(set_exprs, schema)
@@ -3601,39 +3406,31 @@ class VersionedCollection:
                     schema,
                     candidates,
                     pruned,
-                    lambda cand: cand.filter(F.coalesce(pred, F.lit(False))),
+                    lambda cand: cand.filter(hit),
                     append,
                     "update_where:mor",
                     bmap,
                 )
             matched_files = self._files_matching(candidates, m, schema, pred)
-            survivors = None  # no-op version, history parity
-            if matched_files:
-                src = self._apply_dv(
-                    self._read_files(sorted(matched_files), m, schema),
-                    m,
-                    schema,
-                ).withColumn("_vc_hit", F.coalesce(pred, F.lit(False)))
-                hit = F.col("_vc_hit")
-                survivors = apply_set(
-                    src,
+            survivors = self._rewrite_frame(
+                matched_files,
+                m,
+                schema,
+                lambda src: apply_set(
+                    src.withColumn("_vc_hit", hit),
                     {
-                        c: F.when(hit, e).otherwise(F.col(c))
+                        c: F.when(F.col("_vc_hit"), e).otherwise(F.col(c))
                         for c, e in setx.items()
                     },
-                ).coalesce(len(matched_files))
-            return self._commit_cow(
-                "last_update_stats",
-                attempt,
-                base,
-                m,
-                candidates,
-                pruned,
-                matched_files,
-                survivors,
-                schema,
-                "update_where",
-                bmap,
+                ),
+            )
+            _pub, rebases = self._commit_payload(
+                base, m, survivors, schema, "update_where", bmap,
+                removed=matched_files,
+            )
+            return self._record_stats(
+                "last_update_stats", m, candidates, pruned, len(matched_files),
+                attempt, rebases,
             )
 
         return self._retry(max_retries, attempt_fn)
@@ -3654,14 +3451,15 @@ class VersionedCollection:
         manifests (contrast ``VectorCollection.compact_ivf``, which
         swaps directories in place and keeps no history).  Planning is
         directory metadata only; exactly the rewritten bytes are read.
-        A concurrent commit racing the publish surfaces as
-        ``ConcurrentWriteError`` — rerun (compaction has no state to
-        rebase; the rerun just re-plans on the winner's snapshot)."""
+        Compaction commits ONCE, with no re-plan: a commit racing its
+        publish that the publisher proves disjoint (it rewrote and
+        DV'd none of the compacted files and added no file) is rebased
+        onto; any other surfaces as ``ConcurrentWriteError`` with the
+        payload swept — rerun to re-plan on the winner's snapshot."""
         import math
 
         base = self.latest_version()
         m = self.manifest(base)
-        stats = m.get("stats", {})
         sized = [
             (f, os.path.getsize(os.path.join(self.path, f)))
             for f in m["files"]
@@ -3674,7 +3472,6 @@ class VersionedCollection:
                 "files_before": len(m["files"]),
                 "files_after": len(m["files"]),
             }
-        carried = [f for f, s in sized if s >= target_file_bytes]
         schema = StructType.fromJson(json.loads(m["schema"]))
         # DV-applied read: compacting a covered file MATERIALIZES its
         # deletion vector (the dead rows stay out of the rewrite and
@@ -3687,23 +3484,19 @@ class VersionedCollection:
         n_out = max(
             1, math.ceil(sum(s for _, s in small) / target_file_bytes)
         )
-        self._commit(
-            df.coalesce(n_out),
-            base + 1,
+        pub, _ = self._commit_payload(
             base,
+            m,
+            df.coalesce(n_out),
+            schema,
             "compact",
-            carried=carried,
-            schema=schema,
-            carried_stats={f: stats[f] for f in carried if f in stats},
-            id_col=self.properties.get("id_col"),
-            parent_manifest=m,
+            removed={f for f, _ in small},
         )
-        m1 = self.manifest(base + 1)
         return {
             "compacted": len(small),
-            "version": base + 1,
+            "version": pub["version"],
             "files_before": len(m["files"]),
-            "files_after": len(m1["files"]),
+            "files_after": pub["n_carried"] + pub["n_written"],
         }
 
     def restore(self, version: int) -> dict:
@@ -4169,7 +3962,11 @@ class VersionedCollection:
         ``col_stats``) prune range reads on EVERY z-ordered column,
         not just the first sort key — a plain sort by ``c1`` leaves
         each file spanning the entire ``c2`` domain.  Cf. the
-        ``zorder_layout`` query for the bucket-span quality metric."""
+        ``zorder_layout`` query for the bucket-span quality metric.
+        The default id layout keeps recording the parent's Z-order
+        stat columns (exact bounds, no longer tight).  Like
+        ``compact``, a recluster commits once: it rebases onto a race
+        the publisher proves disjoint and raises on any other."""
         if target_files is not None and target_files < 1:
             raise ValueError(
                 f"target_files must be >= 1, got {target_files}"
@@ -4221,14 +4018,7 @@ class VersionedCollection:
         # and the chunked write happen driver-side.  An exact sort
         # split even beats repartitionByRange's sampled boundaries on
         # balance.  Production-sized tables take the JVM path.
-        can_fuse = (
-            len(m["files"]) <= _LOCAL_REWRITE_MAX_FILES
-            and _local_writable(schema)
-            and (zorder_by is None or len(zorder_by or []) >= 2)
-        )
-        if can_fuse:
-            can_fuse = self._fits_local_rewrite(m["files"])
-        if can_fuse:
+        if self._fits_local_rewrite(m["files"], schema):
             dicts = [r.asDict() for r in snap.collect()]
             if zorder_by:
                 import math
@@ -4269,30 +4059,12 @@ class VersionedCollection:
                     return (0, 0) if z is None else (1, z)
 
                 dicts.sort(key=_zkey)
-                stat_cols = list(zorder_by)
             else:
                 dicts.sort(
                     key=lambda d: (d[id_col] is not None, d[id_col])
                 )
-                stat_cols = None
-            self._commit(
-                _LocalRows(_split_chunks(dicts, n_out), schema),
-                base + 1,
-                base,
-                "recluster",
-                carried=[],
-                schema=schema,
-                id_col=id_col,
-                stat_cols=stat_cols,
-                parent_manifest=m,
-            )
-            m1 = self.manifest(base + 1)
-            return {
-                "version": base + 1,
-                "files_before": len(m["files"]),
-                "files_after": len(m1["files"]),
-            }
-        if zorder_by:
+            df = _LocalRows(_split_chunks(dicts, n_out), schema)
+        elif zorder_by:
             # bounds over FINITE values only; a NaN/Inf row must not
             # poison min/max (Spark sorts NaN greatest, so an
             # unguarded max() returns NaN and every address collapses
@@ -4346,22 +4118,23 @@ class VersionedCollection:
                 .sortWithinPartitions("_zaddr")
                 .drop("_zaddr")
             )
-            stat_cols = list(zorder_by)
         else:
             df = snap.repartitionByRange(
                 n_out, id_col
             ).sortWithinPartitions(id_col)
-            stat_cols = None
-        self._commit(
-            df, base + 1, base, "recluster",
-            carried=[], schema=schema, id_col=id_col,
-            stat_cols=stat_cols, parent_manifest=m,
+        pub, _ = self._commit_payload(
+            base,
+            m,
+            df,
+            schema,
+            "recluster",
+            removed=set(m["files"]),
+            stat_cols=zorder_by,
         )
-        m1 = self.manifest(base + 1)
         return {
-            "version": base + 1,
+            "version": pub["version"],
             "files_before": len(m["files"]),
-            "files_after": len(m1["files"]),
+            "files_after": pub["n_carried"] + pub["n_written"],
         }
 
     # -------------------------------------------------------------- vacuum

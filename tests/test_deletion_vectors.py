@@ -145,7 +145,7 @@ def test_mor_write_failing_before_publish_sweeps_sidecar(
     def boom(*a, **kw):
         raise RuntimeError("publish failed")
 
-    monkeypatch.setattr(VersionedCollection, "_publish_mor", boom)
+    monkeypatch.setattr(VersionedCollection, "_publish_rebasing", boom)
     with pytest.raises(RuntimeError, match="publish failed"):
         write(c, spark)
     assert c.latest_version() == 0

@@ -206,6 +206,98 @@ def test_compact_commits_new_version_and_preserves_history(spark, tmp_path):
     assert set(c.manifest(1)["files"]) == set(m1["files"])
 
 
+def test_compact_keeps_zorder_col_stats(spark, tmp_path):
+    """compact records the parent's Z-order stat columns for the files
+    it writes, so x/y stats pruning keeps working after it."""
+    c = VersionedCollection(spark, str(tmp_path), "cpz")
+    c.create(
+        spark.range(64).select(
+            F.col("id"),
+            F.array(F.col("id").cast("double"), F.lit(1.0)).alias("vector"),
+            (F.col("id") / 8).cast("long").alias("x"),
+            (F.col("id") % 8).cast("long").alias("y"),
+        ),
+        dim=2,
+        metric="dot",
+        normalize=False,
+        cluster_files=4,
+    )
+    c.recluster(target_files=4, zorder_by=["x", "y"])
+    c.compact(target_file_bytes=1 << 20)
+    m = c.manifest(c.latest_version())
+    assert m["operation"] == "compact" and m["files"]
+    for f in m["files"]:
+        assert set(m.get("col_stats", {}).get(f) or {}) >= {"x", "y"}, f
+
+
+def _compact_race_table(spark, wh, name):
+    """One 32-row file plus two one-row files; compacting with a
+    target of the big file's size carries it and rewrites the two."""
+    c = VersionedCollection(spark, wh, name)
+    c.create(
+        _mk(spark, [(i, i) for i in range(32)]),
+        dim=3,
+        metric="dot",
+        normalize=False,
+        cluster_files=1,
+    )
+    c.merge(_mk(spark, [(100, 100)]))
+    c.merge(_mk(spark, [(101, 101)]))
+    sizes = {
+        f: os.path.getsize(os.path.join(c.path, f))
+        for f in c.manifest(2)["files"]
+    }
+    big = max(sizes, key=sizes.get)
+    assert all(s < sizes[big] for f, s in sizes.items() if f != big)
+    return c, sizes[big]
+
+
+@pytest.mark.parametrize("racer", ["mor_delete_carried", "rewrite_compacted"])
+def test_compact_publish_race(spark, tmp_path, monkeypatch, racer):
+    """A commit that lands between compact's payload write and its
+    publish.  A MOR delete on a file compact carries is disjoint:
+    compact rebases onto it and lands, reading like an unraced twin.
+    A rewrite of a file compact rewrites is a real conflict: compact
+    raises and leaves no orphan payload under data/."""
+    wh = str(tmp_path)
+    c, target = _compact_race_table(spark, wh, "race")
+
+    def race(other):
+        if racer == "mor_delete_carried":
+            other.delete_where("id = 3", mode="mor")
+        else:
+            other.delete_where("id = 100")
+
+    orig = VersionedCollection._write_payload
+    listing = []
+
+    def hooked(self, *a, **kw):
+        if self is c and not listing:
+            race(VersionedCollection(spark, wh, "race"))
+            listing.append(set(os.listdir(os.path.join(c.path, "data"))))
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(VersionedCollection, "_write_payload", hooked)
+    if racer == "rewrite_compacted":
+        with pytest.raises(ConcurrentWriteError):
+            c.compact(target_file_bytes=target)
+        assert c.latest_version() == 3
+        assert set(os.listdir(os.path.join(c.path, "data"))) == listing[0]
+        return
+    out = c.compact(target_file_bytes=target)
+    monkeypatch.undo()
+    assert out["compacted"] == 2
+    assert [h["operation"] for h in c.history()][-2:] == [
+        "delete_where:mor",
+        "compact",
+    ]
+    twin, _ = _compact_race_table(spark, wh, "twin")
+    twin.delete_where("id = 3", mode="mor")
+    assert twin.compact(target_file_bytes=target) == out
+    assert _state(c) == _state(twin)
+    assert (3, 3) not in _state(c)
+
+
 def test_compact_noop_below_min_files(spark, tmp_path):
     c = VersionedCollection(spark, str(tmp_path), "cp1")
     c.create(
@@ -891,6 +983,26 @@ def _mor_delete(c, spark):
             lambda c, s: c.materialize_dvs(),
             2, id="materialize_dvs",
         ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.compact(),
+            1, id="compact",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.recluster(),
+            1, id="recluster-fused",
+        ),
+        pytest.param(
+            "dot", {"_LOCAL_REWRITE_MAX_BYTES": 0}, None,
+            lambda c, s: c.recluster(),
+            3, id="recluster-distributed",
+        ),
+        pytest.param(
+            "dot", {}, None,
+            lambda c, s: c.recluster(zorder_by=["id", "label"]),
+            1, id="recluster-zorder",
+        ),
     ],
 )
 def test_write_path_spark_job_counts(
@@ -1410,6 +1522,29 @@ def test_fused_handles_binary_and_string_columns(spark, tmp_path):
     assert len(got) == 8
 
 
+def test_merge_into_binary_id_table(spark, tmp_path):
+    """Footer stats of a binary id are stored UTF-8-decoded while the
+    merge keys arrive as bytes: stats pruning must treat the pair as
+    non-comparable (keep the file as a candidate), never raise."""
+    schema = "id binary, vector array<double>, label long"
+    c = VersionedCollection(spark, str(tmp_path), "binid")
+    c.create(
+        spark.createDataFrame(
+            [(f"k{i:02d}".encode(), [float(i)], i) for i in range(16)],
+            schema,
+        ),
+        dim=1,
+        metric="dot",
+        normalize=False,
+        cluster_files=4,
+    )
+    c.merge(spark.createDataFrame([(b"k05", [50.0], 500)], schema))
+    got = {(bytes(r["id"]), r["label"]) for r in c.read().collect()}
+    assert got == {
+        (f"k{i:02d}".encode(), 500 if i == 5 else i) for i in range(16)
+    }
+
+
 # --------------------------------------------------------------- clone
 
 
@@ -1891,7 +2026,7 @@ def test_zorder_nan_rows_null_bucket_jvm_path(spark, tmp_path, monkeypatch):
     c = VersionedCollection(spark, str(tmp_path), "znanj")
     c.create(_nan_table(spark), dim=3, metric="dot", normalize=False)
     monkeypatch.setattr(
-        VersionedCollection, "_fits_local_rewrite", lambda self, fs: False
+        VersionedCollection, "_fits_local_rewrite", lambda self, *a: False
     )
     r = c.recluster(target_files=4, zorder_by=["x", "y"])
     ids = {row.id for row in c.read().collect()}
